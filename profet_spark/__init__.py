@@ -22,7 +22,12 @@ Layout:
   streaming/   Structured-Streaming analogs of the temporal operators
 """
 
+from profet_spark import _worker
 from profet_spark.session import get_spark
+
+# on a Python worker, the first kernel that unpickles a profet_spark
+# reference lands here: drop the fixed per-task cost (see _worker.py)
+_worker.init()
 
 __all__ = ["get_spark"]
 __version__ = "0.4.0"

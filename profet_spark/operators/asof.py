@@ -45,8 +45,9 @@ implemented at the DataFrame level (no custom Catalyst rule — SURVEY.md
     fastest path when the payload fits a struct; bit-identical to
     sort_merge (tests/test_asof.py matrix).
 
-``auto`` picks broadcast when the build side is provably small (one
-bounded ``limit().count()`` probe), salted when the caller supplies
+``auto`` picks broadcast when the build side is provably small (its
+parquet footer row count when it is a bare file scan, else one bounded
+``limit().count()`` probe), salted when the caller supplies
 ``hot_keys`` (from :func:`detect_hot_keys` — one aggregate scan, run it
 explicitly — or an offline skew profile; auto never scans for skew
 implicitly), else sort-merge.
@@ -65,6 +66,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from profet_spark import _worker
+from profet_spark.sources.stats import estimate_row_count
 
 _SIDE = "__asof_side"
 _SALT = "__asof_salt"
@@ -143,6 +147,7 @@ def _merge_kernel(
     lkeep = left_cols + [c for c in by_cols if c not in left_cols]
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.init()
         carry: pd.DataFrame | None = None  # latest right row per by-group
         for pdf in batches:
             if pdf.empty:
@@ -239,9 +244,11 @@ def asof_join(
     left_cols = left.columns
 
     if strategy == "auto":
-        # cheap build-side cardinality probe; at real scale this would read
-        # Iceberg/parquet row-count metadata instead of counting.
-        n_right = right.limit(broadcast_threshold + 1).count()
+        # build-side cardinality from parquet footers (no Spark job); the
+        # bounded count probe only when the footers cannot tell
+        n_right = estimate_row_count(right)
+        if n_right is None:
+            n_right = right.limit(broadcast_threshold + 1).count()
         if n_right <= broadcast_threshold:
             strategy = "broadcast"
         elif hot_keys:
@@ -385,6 +392,7 @@ def _asof_broadcast(left, right, entity, ts, pairs, schema, tolerance_s, allow_e
     dsts = [dst for _, dst in pairs]
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.init()
         rp = bc.value
         for pdf in batches:
             if pdf.empty:

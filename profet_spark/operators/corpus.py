@@ -61,6 +61,7 @@ from typing import Iterable, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from profet_spark import _worker
 from profet_spark.functions import hashing as H
 
 #: basis-point modulus shared by P1/P2 and their oracles.
@@ -316,6 +317,7 @@ def pack_chunks(df: DataFrame, tokens_col: str, capacity: int,
                   f"_pid int, _cum bigint")
 
     def scan_kernel(batches):
+        _worker.init()
         carry = 0
         for pdf in batches:
             if pdf.empty:

@@ -69,6 +69,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from profet_spark import _worker
 from profet_spark.functions import hashing as H
 
 
@@ -651,6 +652,7 @@ def embedding_dup_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     bP = df.sparkSession.sparkContext.broadcast(P)
 
     def sign_kernel(batches):
+        _worker.init()
         P = bP.value
         for pdf in batches:
             if pdf.empty:
@@ -945,6 +947,7 @@ def semantic_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     assign_schema = f"id {id_type}, q array<bigint>, nrm bigint, cid int"
 
     def assign(batches):
+        _worker.init()
         Cm, cnrm = bc.value
         for pdf in batches:
             if pdf.empty:
@@ -965,6 +968,7 @@ def semantic_dup_pairs(df: DataFrame, id_col: str = "vec_id",
         assigned = assigned.join(F.broadcast(big), "cid", "left_anti")
 
     def pair_kernel(key, pdf):
+        _worker.init()
         cid = int(key[0])
         ids = pdf["id"].to_numpy()
         # deterministic processing order (grouped-map arrival order is not)

@@ -79,6 +79,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import BooleanType
 
+from profet_spark import _worker
+
 __all__ = ["BloomFilter", "build_bloom", "bloom_prune",
            "bloom_semi_join", "bloom_anti_join"]
 
@@ -325,6 +327,7 @@ def build_bloom(keys: DataFrame, on: str | Sequence[str], *,
     part_maps = kdf.mapInPandas(_partition_bitmap, schema="bitmap binary")
 
     def _or_merge(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.init()
         acc = np.zeros(n_words, dtype=np.uint64)
         for pdf in it:
             for raw in pdf["bitmap"]:

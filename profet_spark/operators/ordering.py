@@ -42,6 +42,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from profet_spark import _worker
+
 
 def global_row_number(df: DataFrame, order_cols: Sequence[str],
                       group_cols: Sequence[str] = (),
@@ -87,6 +89,7 @@ def global_row_number(df: DataFrame, order_cols: Sequence[str],
     gcols = list(group_cols)
 
     def scan_kernel(batches):
+        _worker.init()
         last_key, carry = None, 0
         for pdf in batches:
             if pdf.empty:

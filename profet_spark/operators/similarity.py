@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from profet_spark import _worker
 from profet_spark.functions import hashing as H
 
 ANN_PLANES = 64  # hyperplane count (signature bits)
@@ -220,6 +221,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
 
     def kernel(batches):
+        _worker.init()
         qids, Qm, qnrm = bq.value
         for pdf in batches:
             if pdf.empty:
@@ -368,6 +370,7 @@ def lsh_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
 
     def rank(batches):
+        _worker.init()
         Qm, qnrm, qidx = bq.value
         for pdf in batches:
             if pdf.empty:
@@ -512,6 +515,7 @@ def _rank_narrow_pairs(cand: DataFrame, csigned: DataFrame,
                                    F.col("nrm").alias("qnrm")), "qid"))
 
     def rank(batches):
+        _worker.init()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -706,6 +710,7 @@ def ivf_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
     bc = spark.sparkContext.broadcast((Cm, cnrm))
 
     def assign(batches):
+        _worker.init()
         Cm, cnrm = bc.value
         for pdf in batches:
             if pdf.empty:
@@ -741,6 +746,7 @@ def ivf_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
         (Qm, qnrm, {qid: i for i, qid in enumerate(qids)}))
 
     def rank(batches):
+        _worker.init()
         Qm, qnrm, qidx = bq.value
         for pdf in batches:
             if pdf.empty:
@@ -831,6 +837,7 @@ def ivf_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
         cell ids per row (first-max/stable order — bit-identical to the
         collected path's np.argmax / stable argsort)."""
         def kernel(batches):
+            _worker.init()
             Cm, cnrm = bc.value
             for pdf in batches:
                 if pdf.empty:
@@ -1104,6 +1111,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         (Qm, {qid: i for i, qid in enumerate(qids)}))
 
     def exact(batches):
+        _worker.init()
         Qm, _ = bq.value
         for pdf in batches:
             if pdf.empty:
@@ -1250,6 +1258,7 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     bq = spark.sparkContext.broadcast(Qm)
 
     def exact(batches):
+        _worker.init()
         Qm = bq.value
         for pdf in batches:
             if pdf.empty:
@@ -1446,6 +1455,7 @@ def ivf_pq_probe(spark, root: str, queries: DataFrame, k: int = 5,
     topn = rerank if rerank else k
 
     def score(batches):
+        _worker.init()
         qids, LUT, probes = blut.value
         sidx = np.arange(m)
         for pdf in batches:
@@ -1484,6 +1494,7 @@ def ivf_pq_probe(spark, root: str, queries: DataFrame, k: int = 5,
     bq = spark.sparkContext.broadcast(Qm)
 
     def exact(batches):
+        _worker.init()
         Qm = bq.value
         for pdf in batches:
             if pdf.empty:

@@ -15,6 +15,28 @@ here is chosen to be correct at both scales:
   1024. Raise it only for narrow all-numeric rows,
 - session timezone pinned UTC so timestamps survive the pandas/DuckDB
   boundary bit-for-bit.
+
+Per-task Python worker cost. Every Python operator task pays a fixed
+cost whatever its row count. PySpark's worker calls
+``importlib.invalidate_caches()`` before each task; on Python < 3.13 that
+makes every zip importer on the worker path re-read its archive's whole
+directory (``pyspark.zip`` and the ``spark-core`` jar: up to ~230 ms
+per task on a 4-core ``local[4]`` box under Python 3.11). After each
+task the daemon runs a full ``gc.collect()`` over the import-time heap
+(~73k objects, 45-49 ms).
+``profet_spark._worker.init`` removes both once per worker process:
+zip directories are re-read only when the archive's mtime or size
+changed (Python < 3.13 only; 3.13 already re-reads lazily), and the
+import-time heap is ``gc.freeze()``-d. It runs on package import, not
+through ``spark.python.daemon.module``, so it also covers sessions this
+module does not build and ``spark-submit --py-files`` jobs, where the
+package is not importable when the daemon starts. Kernels whose closures
+would pull in only pandas call it explicitly.
+
+Spark's "time to initialize Python workers" (``python.init_s`` in
+``perfbench``) is not a cost to chase: ``worker.py`` stamps its boot time
+before its blocking read of the next task, so for a reused worker the
+metric includes the idle wait between tasks.
 """
 
 from __future__ import annotations

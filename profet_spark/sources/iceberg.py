@@ -6,7 +6,7 @@ point callers use either way:
 
 - when an Iceberg catalog is on the classpath AND the session has a
   catalog configured, :func:`write_table` issues the real
-  ``df.writeTo(identifier).partitionedBy(F.days(ts), F.bucket(N, entity))
+  ``df.writeTo(identifier).partitionedBy(PT.days(ts), PT.bucket(N, entity))
   .createOrReplace()`` and :func:`read_table` a plain
   ``spark.table(identifier)`` + source-column filters (Iceberg rewrites
   them into partition predicates itself);
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import partitioning as PT
 
 from profet_spark.sources import partitioned as P
 
@@ -93,8 +94,8 @@ def write_table(df: DataFrame, target: str, ts_col: str = "ts",
     spark = df.sparkSession
     if _route(spark, target) == "iceberg":
         (df.writeTo(target)
-         .partitionedBy(F.days(F.col(ts_col)),
-                        F.bucket(n_buckets, F.col(entity_col)))
+         .partitionedBy(PT.days(F.col(ts_col)),
+                        PT.bucket(n_buckets, F.col(entity_col)))
          .createOrReplace())
         return "iceberg"
     P.write_partitioned(df, target, ts_col=ts_col, entity_col=entity_col,

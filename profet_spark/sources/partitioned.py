@@ -18,7 +18,7 @@ gives the parquet fallback the same contract:
   like Iceberg's hidden partitioning.
 
 On a real cluster the same two calls map 1:1 onto
-``df.writeTo(tbl).partitionedBy(F.days("ts"), F.bucket(8, "image_id"))``
+``df.writeTo(tbl).partitionedBy(partitioning.days("ts"), partitioning.bucket(8, "image_id"))``
 plus a plain source-column filter (Iceberg performs the predicate rewrite
 itself); callers migrate by swapping this module for the catalog writer.
 

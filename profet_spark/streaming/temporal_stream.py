@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from profet_spark import _worker
+
 
 def read_parquet_stream(spark: SparkSession, path: str, schema: StructType,
                         ts_col: str = "ts", watermark: str = "1 hour") -> DataFrame:
@@ -150,6 +152,7 @@ def stateful_asof_attach(stream: DataFrame, entity: str = "user_id",
     in_cols = stream.columns
 
     def attach(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return
@@ -239,6 +242,7 @@ def stateful_matrix_attach(stream: DataFrame, entity: str = "user_id",
     in_cols = stream.columns
 
     def attach(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return
@@ -324,6 +328,7 @@ def stateful_drift_profile(stream: DataFrame, bits_col: str = "ph",
     keep = mean_window - 1
 
     def profile(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return
@@ -415,6 +420,7 @@ def stateful_decayed_stats(stream: DataFrame, col: str = "value",
     keep = n - 1
 
     def fold(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return
@@ -514,6 +520,7 @@ def stateful_windowed_agg(stream: DataFrame, src_col: str,
     in_cols = stream.columns
 
     def agg(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return
@@ -627,6 +634,7 @@ def stateful_target_encode(stream: DataFrame, category: str, label: str,
     q6 = Decimal("0.000001")
 
     def fold(key, pdfs, state):
+        _worker.init()
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if pdf.empty:
             return

@@ -207,6 +207,48 @@ def test_asof_auto_strategy_selection(spark, sf_dir):
     assert got["rv"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
 
 
+def _jobs_during(spark, fn):
+    """(result of fn(), ids of the Spark jobs fn started), through the
+    status tracker's job ids for a job group set around the call."""
+    sc, group = spark.sparkContext, "asof-auto-plan"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "asof_join(strategy='auto') plan build")
+    try:
+        before = set(tracker.getJobIdsForGroup(group))
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, set(tracker.getJobIdsForGroup(group)) - before
+
+
+def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp_path):
+    """With a parquet-backed right side, auto sizes the build side from
+    footer row counts: no probe job runs while the plan is built. Past the
+    threshold it picks sort-merge (no job at all); at it, broadcast (only
+    the build side's collect)."""
+    from profet_spark import plans
+    ldf, rdf, lp, rp = fixture_dfs
+    path = str(tmp_path / "right")
+    rdf.repartition(3).write.parquet(path)
+    right = spark.read.parquet(path)
+    want = _oracle(lp, rp)
+
+    merged, jobs = _jobs_during(spark, lambda: asof_join(
+        ldf, right, strategy="auto", broadcast_threshold=len(rp) - 1))
+    assert not jobs
+    assert plans.has_node(merged, "Exchange") and "MapInPandas" in plans.formatted_plan(merged)
+    got = _norm(merged.toPandas())
+    pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
+
+    merged, jobs = _jobs_during(spark, lambda: asof_join(
+        ldf, right, strategy="auto", broadcast_threshold=len(rp)))
+    assert len(jobs) == 1 and plans.is_shuffle_free(merged)
+    got = _norm(merged.toPandas())
+    pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
+
+
 def test_asof_auto_upgrades_to_salted_on_hot_keys(spark, sf_dir):
     """auto + hot_keys (and a large-ish build side) must take the salted
     path — observable by the salt projection in the plan."""
