@@ -14,6 +14,7 @@ both sides.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +45,9 @@ from profet_spark.operators import (
 from profet_spark.sources import load_table
 
 SF0001 = "/root/testdata/sf0.001"
+# frozen golden parquets the image-tier oracles read (next to this file)
+_FIXTURES_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BENCH", "fixtures")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1666,26 +1670,6 @@ def _q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs the exact N1 baseline is asserted in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_ann(emb, emb.where(F.col("vec_id") < 20), k=5, dim=64)
-
-
-def _q_lsh_ann_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N2 scale path: the fully distributed band join (neither side
-    collected to the driver). Row-identical to lsh_ann by construction
-    (same plane signatures, exact int64 cosine, same ranking), so it is
-    graded against the SAME bit-exact SQL oracle as n2_lsh_ann."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_ann_distributed(
-        emb, emb.where(F.col("vec_id") < 20), k=5, dim=64)
-
-
-def _q_ivf_ann_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N3 scale path: fully distributed IVF probing (neither side
-    collected). Row-identical to ivf_ann by construction, so it is graded
-    against the SAME bit-exact SQL oracle (lowest_id centroid strategy)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_ann_distributed(
-        emb, emb.where(F.col("vec_id") < 20), k=5,
-        n_centroids=16, n_probe=3, centroids="lowest_id")
 
 
 def _q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3985,12 +3969,12 @@ def _q_e2e_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_n1n4_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N1-N4 merged ANN suite (round 5, VERDICT r4 ask #2): the whole
     similarity-search family in ONE driver-graded row — exact cosine
-    top-k (n1), LSH ANN + its fully-distributed twin (n2/n2d), IVF ANN
-    + distributed twin (n3/n3d), PQ ADC top-k (n4p), IVF-PQ (n4i), the
-    persisted-index serving probe (n4s — write_ivf_pq_index +
-    ivf_pq_probe over the parquet artifact, same oracle as n4i), and
-    the exploded (id, cid, subspace, code) index rows themselves (n4x —
-    every code byte hash-visible). All parts are deterministic
+    top-k (n1), LSH ANN (n2; n2d repeats it under the part name of the
+    former distributed twin), IVF ANN (n3; likewise n3d), PQ ADC top-k
+    (n4p), IVF-PQ (n4i), the persisted-index serving probe (n4s —
+    write_ivf_pq_index + ivf_pq_probe over the parquet artifact, same
+    oracle as n4i), and the exploded (id, cid, subspace, code) index
+    rows themselves (n4x — every code byte hash-visible). All parts are deterministic
     (lowest_id centroids/codebooks, exact int64 arithmetic) so each
     grades bitwise against its standalone component oracle, composed
     verbatim in oracle_sql. Generic (part, q, nb, rank, i1, x1) layout:
@@ -4016,11 +4000,10 @@ def _q_n1n4_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("n4x").alias("part"), i64("vec_id").alias("q"),
         i64("cid").alias("nb"), i64("s").alias("rank"),
         i64("code").alias("i1"), F.lit(-1.0).cast("double").alias("x1"))
+    lsh, ivf = _q_lsh_ann(spark, sf_dir), _q_ivf_ann(spark, sf_dir)
     out = cos_part(_q_cosine_topk(spark, sf_dir), "n1")
-    for p in [cos_part(_q_lsh_ann(spark, sf_dir), "n2"),
-              cos_part(_q_lsh_ann_distributed(spark, sf_dir), "n2d"),
-              cos_part(_q_ivf_ann(spark, sf_dir), "n3"),
-              cos_part(_q_ivf_ann_distributed(spark, sf_dir), "n3d"),
+    for p in [cos_part(lsh, "n2"), cos_part(lsh, "n2d"),
+              cos_part(ivf, "n3"), cos_part(ivf, "n3d"),
               adc_part(_q_pq_topk(spark, sf_dir), "n4p"),
               adc_part(_q_ivf_pq_topk(spark, sf_dir), "n4i"),
               adc_part(_q_ivf_pq_probe(spark, sf_dir), "n4s"),
@@ -4040,26 +4023,37 @@ def _q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     D3 pair set over the ingested corpus (batch-internal pairs land
     with their batch, cross-batch pairs with the later one, none twice)
     — so this streaming composition grades bitwise against the plain
-    d3_minhash_lsh oracle, whatever the trigger file order."""
+    d3_minhash_lsh oracle, whatever the trigger file order.
+
+    The pairs are materialized (local checkpoint) before the four temp
+    directories are removed; a stream that does not finish within 600 s
+    is stopped and raises."""
+    import shutil
     import tempfile
 
     from profet_spark.streaming import ingest_stream
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="st_d11_src_")
-    docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite").parquet(src)
-    docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append").parquet(src)
-    store = tempfile.mkdtemp(prefix="st_d11_store_") + "/store"
-    pairs_dir = tempfile.mkdtemp(prefix="st_d11_pairs_")
-    ck = tempfile.mkdtemp(prefix="st_d11_ck_")
-    stream = (spark.readStream.schema("doc_id bigint, text string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = ingest_stream(stream, store, pairs_dir, ck)
-    q.awaitTermination(600)
-    return spark.read.parquet(pairs_dir).select(
-        "id_a", "id_b", "inter", "na", "nb", "jaccard")
+    src, store_root, pairs_dir, ck = (
+        tempfile.mkdtemp(prefix=f"st_d11_{p}_")
+        for p in ("src", "store", "pairs", "ck"))
+    try:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+            "overwrite").parquet(src)
+        docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+            "append").parquet(src)
+        stream = (spark.readStream.schema("doc_id bigint, text string")
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        q = ingest_stream(stream, store_root + "/store", pairs_dir, ck)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError("st_d11 ingest stream still running after 600 s")
+        return spark.read.parquet(pairs_dir).select(
+            "id_a", "id_b", "inter", "na", "nb", "jaccard"
+        ).localCheckpoint(eager=True)
+    finally:
+        for d in (src, store_root, pairs_dir, ck):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 _QUERY_SCOPES: "list[dedup.PersistScope]" = []
@@ -4089,12 +4083,13 @@ def _scoped(fn: Callable[[SparkSession, str], DataFrame]
         _QUERY_SCOPES.append(scope)
         while len(_QUERY_SCOPES) > 2:
             _QUERY_SCOPES.pop(0).release()
-        prev = dedup.PersistScope._active
-        dedup.PersistScope._active = scope
+        active = dedup.PersistScope._active
+        prev = active.scope
+        active.scope = scope
         try:
             return fn(spark, sf_dir)
         finally:
-            dedup.PersistScope._active = prev
+            active.scope = prev
     return run
 
 
@@ -4105,7 +4100,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     T1-T5, P6+T6 (hygiene), C5+C7, C6+C8+C9, O4+O5, W3+W4, J4+J5,
     W9-W12+FM2-FE2, S8-S14+S1b (store maintenance incl. the round-5
     JSONL/CSV ingest parts), N1-N4 (the round-5 nine-part ANN suite:
-    exact/LSH/IVF + distributed twins + PQ/IVF-PQ/index/serving probe),
+    exact/LSH/IVF (n2d/n3d repeat n2/n3) + PQ/IVF-PQ/index/serving probe),
     and the §2.9 streaming twins — three standalone plus the profile
     (round 5: + st_a17 retention part) and curation stream suites — in
     one row each; e2e_training_pipeline is the composed FM→FM5→FE1→FE2
@@ -4208,8 +4203,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- composed end-to-end pipeline (FM→FM5→FE1→FE2) --
         # the "assemble a leakage-safe training set" integration row
         "e2e_training_pipeline": _q_e2e_training_pipeline,
-        # -- ANN (N1-N4, round 5 merged: exact/LSH/IVF + both
-        # distributed twins + PQ/IVF-PQ/index/serving probe) --
+        # -- ANN (N1-N4, round 5 merged: exact/LSH/IVF + PQ/IVF-PQ/
+        # index/serving probe) --
         "n1n4_ann_suite": _q_n1n4_ann_suite,
         # D11 incremental ingest-vs-store near-dup, standalone driver
         # row (r4 marked it weak pending the plan pin — now green)
@@ -4339,9 +4334,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fm5_entity_folds": _q_entity_folds,
         "fe1_split_scaler": _q_split_scaler,
         "fe2_target_encode": _q_target_encode,
-        # N2/N3 distributed scale paths (same oracles as n2/n3)
-        "n2_lsh_ann_distributed": _q_lsh_ann_distributed,
-        "n3_ivf_ann_distributed": _q_ivf_ann_distributed,
+        # historical keys of the former distributed N2/N3 twins: the
+        # same operators as n2/n3 now (one implementation per index
+        # type), kept so the key set and oracles stay stable
+        "n2_lsh_ann_distributed": _q_lsh_ann,
+        "n3_ivf_ann_distributed": _q_ivf_ann,
         # P1-P4 components (graded together via p1p4_corpus_suite above)
         "p1_hash_split": _q_hash_split,
         "p2_stratified_sample": _q_stratified_sample,
@@ -5976,7 +5973,7 @@ def oracle_sql() -> dict[str, str]:
     # (BENCH/freeze_image_goldens.py) + the hamming-drift window
     # recomputed in SQL from the stored phash column — grades the codec
     # roundtrip, the Arrow decode plumbing, and the C8+W3 drift window
-    d["image_features_sql_slice"] = """
+    d["image_features_sql_slice"] = f"""
         SELECT image_id, ts, w, h, fmt, phash,
                g_lum_mean AS lum_mean, g_lum_var AS lum_var,
                g_edge_density AS edge_density,
@@ -5988,7 +5985,7 @@ def oracle_sql() -> dict[str, str]:
         FROM (SELECT *, lag(phash) OVER (
                   PARTITION BY image_id ORDER BY ts) AS prev
               FROM read_parquet(
-                  '/root/repo/BENCH/fixtures/image_slice_golden.parquet'))
+                  '{_FIXTURES_DIR}/image_slice_golden.parquet'))
     """
     # Image two-tier curation gate (round 5 — was rows-only): the
     # oracle replants the metadata defects with the portable h32,
@@ -5996,7 +5993,7 @@ def oracle_sql() -> dict[str, str]:
     # pixel tier over the frozen direct-from-pixels stats — the WHOLE
     # gate (flags, first-failing reject_reason, NULLed stats for
     # never-decoded rejects, and the decoded lum_mean values) bitwise
-    _cur = "read_parquet('/root/repo/BENCH/fixtures/curate_slice_golden.parquet')"
+    _cur = f"read_parquet('{_FIXTURES_DIR}/curate_slice_golden.parquet')"
     d["image_curation_pipeline"] = f"""
         WITH planted AS (
           SELECT image_id, ts,
@@ -6040,13 +6037,13 @@ def oracle_sql() -> dict[str, str]:
     # Multimodal resize slice (round 5): frozen direct-from-pixels
     # goldens of the 8×8 nearest-neighbor resample's stats — grades
     # decode → resample → re-encode → decode → stats bitwise
-    d["multimodal_resize_slice"] = """
+    d["multimodal_resize_slice"] = f"""
         SELECT image_id, ts, CAST(8 AS INTEGER) AS w,
                CAST(8 AS INTEGER) AS h, 'ppm' AS fmt,
                g_lum_mean AS lum_mean, g_lum_var AS lum_var,
                g_edge_density AS edge_density
         FROM read_parquet(
-            '/root/repo/BENCH/fixtures/resize_slice_golden.parquet')
+            '{_FIXTURES_DIR}/resize_slice_golden.parquet')
     """
     # ... and the original pipeline key (same computation, historical
     # name) grades against the same frozen table — rows-only no more
@@ -6056,13 +6053,13 @@ def oracle_sql() -> dict[str, str]:
     # 4×16-bit block explode, oversized-(blk,val)-bucket anti-join,
     # block equi-join, bit_count verify, pair-distinct — over the
     # frozen fixture's stored phash (latest snapshot per entity)
-    d["d8_phash_dup_pairs"] = """
+    d["d8_phash_dup_pairs"] = f"""
         WITH latest AS (
           SELECT image_id AS id, phash AS bits FROM (
             SELECT image_id, phash, row_number() OVER (
                 PARTITION BY image_id ORDER BY ts DESC) AS rn
             FROM read_parquet(
-                '/root/repo/BENCH/fixtures/image_slice_golden.parquet'))
+                '{_FIXTURES_DIR}/image_slice_golden.parquet'))
           WHERE rn = 1),
         blocks AS (
           SELECT id, bits, blk, (bits >> (16 * blk)) & 65535 AS val
@@ -6084,13 +6081,13 @@ def oracle_sql() -> dict[str, str]:
     # frozen fixture's stored phash (latest snapshot per entity),
     # components via the same recursive-CTE convention as d6, survivors
     # via anti-join — the whole image near-dedup composition bitwise
-    d["d8_image_keep_one"] = """
+    d["d8_image_keep_one"] = f"""
         WITH RECURSIVE latest AS (
           SELECT image_id, phash FROM (
             SELECT image_id, phash, row_number() OVER (
                 PARTITION BY image_id ORDER BY ts DESC) AS rn
             FROM read_parquet(
-                '/root/repo/BENCH/fixtures/image_slice_golden.parquet'))
+                '{_FIXTURES_DIR}/image_slice_golden.parquet'))
           WHERE rn = 1),
         p AS (
           SELECT a.image_id AS id_a, b.image_id AS id_b
@@ -6113,7 +6110,7 @@ def oracle_sql() -> dict[str, str]:
     # Full image snapshot pipeline (round 5 — was rows-only): same
     # frozen-goldens contract as image_features_sql_slice, full column
     # set (rowprof + both hashes + drift window)
-    d["image_snapshot_pipeline"] = """
+    d["image_snapshot_pipeline"] = f"""
         SELECT image_id, ts, w, h, fmt,
                g_lum_mean AS lum_mean, g_lum_var AS lum_var,
                g_edge_density AS edge_density,
@@ -6125,7 +6122,7 @@ def oracle_sql() -> dict[str, str]:
         FROM (SELECT *, lag(phash) OVER (
                   PARTITION BY image_id ORDER BY ts) AS prev
               FROM read_parquet(
-                  '/root/repo/BENCH/fixtures/image_slice_golden.parquet'))
+                  '{_FIXTURES_DIR}/image_slice_golden.parquet'))
     """
     # N1-N4 merged ANN suite (round 5): every part composed verbatim
     # from its standalone component oracle — the serving probe (n4s)
@@ -6870,12 +6867,10 @@ def _oracle_sql_base() -> dict[str, str]:
         "a13_autocorr": _duck_autocorr_sql(),
         "d5_embedding_dup_lsh": _duck_lsh_dup_sql(0.3),
         "n2_lsh_ann": _duck_lsh_ann_sql(20, 5),
-        # the distributed band join is row-identical to lsh_ann by
-        # construction, so the same bit-exact oracle grades it
+        # historical key, same operator as n2_lsh_ann
         "n2_lsh_ann_distributed": _duck_lsh_ann_sql(20, 5),
         "n3_ivf_ann": _duck_ivf_ann_sql(16, 3, 20, 5),
-        # the distributed IVF probe is row-identical to ivf_ann by
-        # construction, so the same bit-exact oracle grades it
+        # historical key, same operator as n3_ivf_ann
         "n3_ivf_ann_distributed": _duck_ivf_ann_sql(16, 3, 20, 5),
         # stateful streaming as-of graded against DuckDB's native ASOF JOIN.
         # `value IS NOT NULL` matches the kernel's non-null-right contract:

@@ -66,6 +66,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -82,6 +84,10 @@ def normalized(text_col: str) -> F.Column:
     return F.btrim(
         F.regexp_replace(F.lower(F.col(text_col)), H.WS_RE, " "),
         F.lit(" "))
+
+
+class _ActiveScope(threading.local):
+    scope: "PersistScope | None" = None
 
 
 class PersistScope:
@@ -104,21 +110,22 @@ class PersistScope:
     Materialize (write/collect/count) the output BEFORE the scope
     exits — after release the plan recomputes from source (correct,
     just slower). Scopes nest; each releases only its own frames.
-    Driver-side single-threaded by design (module-level active scope),
-    matching how the batch pipelines drive these operators."""
+    The open scope is per thread: Structured Streaming runs
+    ``foreachBatch`` on its own driver thread, whose scope must neither
+    collect the main thread's frames nor release them."""
 
-    _active: "PersistScope | None" = None
+    _active = _ActiveScope()
 
     def __init__(self) -> None:
         self.frames: list[DataFrame] = []
 
     def __enter__(self) -> "PersistScope":
-        self._prev = PersistScope._active
-        PersistScope._active = self
+        self._prev = PersistScope._active.scope
+        PersistScope._active.scope = self
         return self
 
     def __exit__(self, *exc) -> None:
-        PersistScope._active = self._prev
+        PersistScope._active.scope = self._prev
         self.release()
 
     def release(self) -> None:
@@ -129,8 +136,9 @@ class PersistScope:
 
 def _register(df: DataFrame) -> DataFrame:
     """Track an already-persisted frame in the active scope, if any."""
-    if PersistScope._active is not None:
-        PersistScope._active.frames.append(df)
+    scope = PersistScope._active.scope
+    if scope is not None:
+        scope.frames.append(df)
     return df
 
 
@@ -631,54 +639,12 @@ def embedding_dup_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     if first is None:
         return df.sparkSession.createDataFrame(
             [], f"id_a {dict(df.dtypes)[id_col]}, id_b {dict(df.dtypes)[id_col]}, cosine double")
-    dim = int(first["d"])
-    P = S._planes_matrix(dim)
-
-    import numpy as np
-
-    id_type = dict(df.dtypes)[id_col]
     # zero-norm vectors are excluded — same undefined-direction contract
     # as similarity._quantized (a NaN cosine would pass Spark's >=
     # threshold test, NaN > any double, while DuckDB drops it)
-    qd = _maybe_persist(df.select(
-        F.col(id_col).alias("id"), H.quantize_vec(vec_col).alias("q"),
-    ).withColumn("nrm", H.int_dot(F.col("q"), F.col("q")))
-        .where(F.col("nrm") > 0), persist)
-
-    sig_schema = f"id {id_type}, sig bigint"
-
-    # plane matrix rides a broadcast variable (once per executor), not the
-    # task closure (once per task)
-    bP = df.sparkSession.sparkContext.broadcast(P)
-
-    def sign_kernel(batches):
-        _worker.init()
-        P = bP.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"embedding_dup_pairs_lsh: vector dim {C.shape[1]} != {dim}")
-            out = pdf[["id"]].copy()
-            out["sig"] = S._pack_signatures((C @ P.T) > 0)
-            yield out
-
-    mask = (1 << S.ANN_BAND_BITS) - 1
-    banded = qd.mapInPandas(sign_kernel, sig_schema).select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).cast("int").alias("band"),
-                     F.shiftright("sig", S.ANN_BAND_BITS * b)
-                     .bitwiseAND(F.lit(mask)).alias("digest"))
-            for b in range(S.ANN_BANDS)
-        ])).alias("bd"),
-    ).select("id", F.col("bd.band").alias("band"), F.col("bd.digest").alias("digest"))
-    if max_bucket is not None:
-        big = (banded.groupBy("band", "digest").count()
-               .where(F.col("count") > max_bucket).select("band", "digest"))
-        banded = banded.join(F.broadcast(big), ["band", "digest"], "left_anti")
+    qd = _maybe_persist(S._quantized(df, id_col, vec_col), persist)
+    banded = S._lsh_bands(qd, int(first["d"]), "embedding_dup_pairs_lsh",
+                          max_bucket=max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (

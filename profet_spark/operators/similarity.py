@@ -20,10 +20,12 @@ Scale notes (100 TB corpus):
 - N1 broadcasts ONLY the query side (queries are small by construction);
   the corpus is scanned once, map-side, no shuffle before the final
   per-query top-k (which AQE handles as a tiny aggregate).
-- N2 broadcasts the query band digests, so candidate generation is
-  map-side (zero shuffle); signatures and re-rank cosines are one int64
-  matmul per Arrow batch, and only (query_id, neighbor_id, cosine) winners
-  ever cross an exchange.
+- N2 and N3 collect neither side: both sides are signed (N2) or
+  cell-assigned (N3) map-side by one int64 matmul per Arrow batch, the
+  candidate (query, corpus) id pairs are formed and deduped while still
+  narrow (no vectors cross that exchange), and only then are the
+  quantized vectors attached for the exact re-rank. One implementation
+  per index type serves any query-side size; AQE broadcasts a small side.
 - N4 (pq_encode/pq_topk) stores m one-byte codes per row instead of the
   vector — the footprint cut that lets a 10^12-row embedding store live
   in executor memory; ADC scoring reads only codes + broadcast LUTs, and
@@ -37,32 +39,26 @@ from pyspark.sql.window import Window
 
 from profet_spark import _worker
 from profet_spark.functions import hashing as H
+from profet_spark.operators.dedup import _register
 
 ANN_PLANES = 64  # hyperplane count (signature bits)
 ANN_BANDS = 8    # 8 bands x 8 bits
 ANN_BAND_BITS = 8
-# The ANN operators collect the QUERY side to the driver (queries are small
-# by contract — the corpus stays distributed). Guard against a caller
-# passing a huge query set: fail with a clear error instead of a driver OOM.
+# cosine_topk and the PQ operators collect the QUERY side to the driver
+# (queries are small by contract — the corpus stays distributed). Guard
+# against a caller passing a huge query set: fail with a clear error
+# instead of a driver OOM.
 ANN_MAX_QUERIES = 65536
 
 
 def _collect_query_side(qdf: DataFrame, caller: str,
-                        max_queries: int | None = None,
-                        on_over: str = "raise") -> list | None:
+                        max_queries: int | None = None) -> list:
     """Bounded collect of the quantized query rows: reads at most
     ``max_queries + 1`` rows (LIMIT pushes into the scan), so an oversized
-    query side costs one cheap bounded job, not a driver OOM.
-
-    ``on_over="none"`` returns None instead of raising — the
-    ``on_large='distributed'`` auto-routing uses this so routing and
-    collection share ONE bounded scan (a separate count probe would
-    re-scan the query side on every small-query call)."""
+    query side costs one cheap bounded job, not a driver OOM."""
     cap = ANN_MAX_QUERIES if max_queries is None else max_queries
     rows = qdf.select("id", "q", "nrm").limit(cap + 1).collect()
     if len(rows) > cap:
-        if on_over == "none":
-            return None
         raise ValueError(
             f"{caller}: query side exceeds {cap} rows; it is collected to "
             "the driver by design. Split the query set, raise max_queries "
@@ -122,7 +118,7 @@ def _signature_bits(qvec_col: F.Column, dim: int) -> F.Column:
     Per-row HOF *reference form* only (Spark interprets HOF lambdas per
     element — the engine's measured ~40x slow path): the production path
     computes the identical value with one int64 matmul in the Arrow
-    signature kernel inside :func:`lsh_ann`; tests assert the two agree
+    signature kernel of :func:`_lsh_bands`; tests assert the two agree
     bitwise. Java long and numpy int64 arithmetic both wrap two's
     complement, so even a (pathological) overflow cannot diverge."""
     sig = F.lit(0).cast("bigint")
@@ -157,6 +153,11 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         H.quantize_vec(vec_col).alias("q"),
     ).withColumn("nrm", H.int_dot(F.col("q"), F.col("q"))).where(
         F.col("nrm") > 0)
+
+
+def _empty_topk(spark, out_schema: str) -> DataFrame:
+    return spark.createDataFrame([], out_schema).withColumn(
+        "rank", F.lit(1).cast("int"))
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -205,10 +206,9 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_type = dict(corpus.dtypes)[id_col]
     q_rows = _collect_query_side(
         _quantized(queries, id_col, vec_col), "cosine_topk", max_queries)
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
     if not q_rows:
-        empty_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-        return corpus.sparkSession.createDataFrame([], empty_schema).withColumn(
-            "rank", F.lit(1).cast("int"))
+        return _empty_topk(corpus.sparkSession, out_schema)
     # broadcast, don't closure-capture: a captured matrix is cloudpickled
     # into EVERY task binary (N tasks x size driver egress); a broadcast
     # variable ships once per executor (same pattern as asof._asof_broadcast)
@@ -217,8 +217,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         np.asarray([r["q"] for r in q_rows], dtype=np.int64),
         np.asarray([r["nrm"] for r in q_rows], dtype=np.float64),
     ))
-
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
 
     def kernel(batches):
         _worker.init()
@@ -252,267 +250,140 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     return local.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def lsh_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            dim: int | None = None, max_bucket: int | None = None,
-            max_queries: int | None = None,
-            on_large: str = "raise") -> DataFrame:
-    """N2: LSH-bucketed approximate top-k (the 100 TB path).
+def _lsh_bands(qd: DataFrame, dim: int, caller: str, id_alias: str = "id",
+               max_bucket: int | None = None) -> DataFrame:
+    """Sign-LSH band rows ``(id_alias, band, digest)`` of a quantized
+    ``(id, q, nrm)`` frame — the one signature kernel and band explode
+    behind N2 :func:`lsh_ann` and D5 ``dedup.embedding_dup_pairs_lsh``.
 
-    ``on_large`` controls the oversized-query-side behavior:
-    ``"raise"`` (default) keeps the documented driver-collect contract
-    and raises past ``max_queries``; ``"distributed"`` probes the bound
-    first (a LIMIT-pushed count, never a collect) and transparently
-    routes to :func:`lsh_ann_distributed` — identical output, no driver
-    materialization of either side.
+    Signatures are ONE Arrow mapInPandas int64 matmul per batch against
+    the broadcast (ANN_PLANES x dim) plane matrix (bitwise equal to the
+    :func:`_signature_bits` reference form); each is exploded into
+    ANN_BANDS 8-bit digests. The vectors are dropped here, so a join on
+    the bands exchanges only narrow rows. A vector whose length is not
+    ``dim`` raises instead of silently collapsing into one bucket.
 
-    Candidates: corpus rows sharing >=1 of the ANN_BANDS signature bands
-    with the query; exact cosine + top-k among candidates. Returns the same
-    schema as :func:`cosine_topk` (rank may hold fewer than k rows per
-    query when buckets are sparse).
-
-    Scale shape (64 planes, 8 bands x 8-bit digests):
-    - Corpus signatures: ONE Arrow mapInPandas kernel doing an int64 matmul
-      against the broadcast (64 x dim) plane matrix — no interpreted HOF
-      folds in the per-row path.
-    - Band probe: the query band digests (small by contract) are broadcast;
-      the band equi-join is map-side, zero shuffle — an expected ~1/256 of
-      the corpus collides per band on unclustered data (vs 1/16 with the
-      old 4-bit digests, which degenerated to a near cross join).
-    - Re-rank: candidates are exact-cosine'd per Arrow batch with the SAME
-      int64 matmul kernel as cosine_topk (batch-local top-k), then a tiny
-      (query_id, neighbor_id, cosine) dedup + window pick the global top-k.
-
-    ``dim`` defaults to the query vectors' length; every corpus vector is
-    asserted to match (a silent mismatch would null out projections and
-    collapse all rows into one bucket — fail loudly instead).
-
-    ``max_bucket`` drops (band, digest) buckets holding more corpus rows
-    than the cap — the skew guard for duplicate-heavy corpora where one
-    digest would otherwise dominate the candidate volume (narrow count agg
-    + broadcast anti-join; recall loss only inside the capped buckets)."""
+    ``max_bucket`` drops (band, digest) buckets holding more rows than
+    the cap — the skew guard for duplicate-heavy data (narrow count agg +
+    broadcast anti-join; recall loss only inside the capped buckets)."""
     import numpy as np
-    import pandas as pd
 
-    id_type = dict(corpus.dtypes)[id_col]
-    spark = corpus.sparkSession
-
-    if on_large not in ("raise", "distributed"):
-        raise ValueError(f"lsh_ann: unknown on_large={on_large!r}")
-    # routing and collection share one bounded scan: None = over cap
-    q_rows = _collect_query_side(
-        _quantized(queries, id_col, vec_col), "lsh_ann", max_queries,
-        on_over="none" if on_large == "distributed" else "raise")
-    if q_rows is None:
-        return lsh_ann_distributed(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            dim=dim, max_bucket=max_bucket)
-    if not q_rows:
-        empty = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-        return spark.createDataFrame([], empty).withColumn("rank", F.lit(1).cast("int"))
-    qids = [r["id"] for r in q_rows]
-    Qm = np.asarray([r["q"] for r in q_rows], dtype=np.int64)
-    qnrm = np.asarray([r["nrm"] for r in q_rows], dtype=np.float64)
-    if dim is None:
-        dim = Qm.shape[1]
-    if Qm.shape[1] != dim:
-        raise ValueError(
-            f"lsh_ann: query vectors have dim {Qm.shape[1]}, expected {dim}")
-
-    P = _planes_matrix(dim)
-    qsig = _pack_signatures((Qm @ P.T) > 0).view(np.uint64)
-    mask = (1 << ANN_BAND_BITS) - 1
-    probes = [(b, int((int(qsig[i]) >> (ANN_BAND_BITS * b)) & mask), qid)
-              for i, qid in enumerate(qids) for b in range(ANN_BANDS)]
-    probe_df = spark.createDataFrame(
-        probes, f"band int, digest bigint, qid {id_type}")
-
-    # ship the plane + query matrices once per executor, not per task
-    bP = spark.sparkContext.broadcast(P)
-    bq = spark.sparkContext.broadcast(
-        (Qm, qnrm, {qid: i for i, qid in enumerate(qids)}))
-
-    sig_schema = f"id {id_type}, q array<bigint>, nrm bigint, sig bigint"
+    bP = qd.sparkSession.sparkContext.broadcast(_planes_matrix(dim))
 
     def sign_kernel(batches):
+        _worker.init()
         P = bP.value
         for pdf in batches:
             if pdf.empty:
                 continue
             C = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
             if C.shape[1] != dim:
-                raise ValueError(
-                    f"lsh_ann: corpus vector dim {C.shape[1]} != query dim {dim}")
-            out = pdf[["id", "q", "nrm"]].copy()
+                raise ValueError(f"{caller}: vector dim {C.shape[1]} != {dim}")
+            out = pdf[["id"]].copy()
             out["sig"] = _pack_signatures((C @ P.T) > 0)
             yield out
 
-    signed = _quantized(corpus, id_col, vec_col).mapInPandas(sign_kernel, sig_schema)
-    banded = signed.select(
-        "id", "q", "nrm",
+    mask = (1 << ANN_BAND_BITS) - 1
+    sig_schema = f"id {dict(qd.dtypes)['id']}, sig bigint"
+    bands = qd.select("id", "q").mapInPandas(sign_kernel, sig_schema).select(
+        F.col("id").alias(id_alias),
         F.explode(F.array(*[
             F.struct(F.lit(b).cast("int").alias("band"),
                      F.shiftright("sig", ANN_BAND_BITS * b)
                      .bitwiseAND(F.lit(mask)).alias("digest"))
             for b in range(ANN_BANDS)
         ])).alias("bd"),
-    ).select("id", "q", "nrm", F.col("bd.band").alias("band"),
+    ).select(id_alias, F.col("bd.band").alias("band"),
              F.col("bd.digest").alias("digest"))
-
     if max_bucket is not None:
-        big = (banded.groupBy("band", "digest").count()
+        big = (bands.groupBy("band", "digest").count()
                .where(F.col("count") > max_bucket).select("band", "digest"))
-        banded = banded.join(F.broadcast(big), ["band", "digest"], "left_anti")
-    cand = (banded.join(F.broadcast(probe_df), ["band", "digest"])
-            .where(F.col("qid") != F.col("id"))
-            .select("qid", "id", "q", "nrm"))
-
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-
-    def rank(batches):
-        _worker.init()
-        Qm, qnrm, qidx = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # a corpus row's <=ANN_BANDS band matches land in the same batch
-            # (no shuffle since the explode) — dedup is batch-local cheap
-            pdf = pdf.drop_duplicates(subset=["qid", "id"])
-            res = {"query_id": [], "neighbor_id": [], "cosine": []}
-            for qid, grp in pdf.groupby("qid", sort=False):
-                C = np.asarray([np.asarray(v, dtype=np.int64) for v in grp["q"]])
-                ids = grp["id"].to_numpy()
-                nrm = grp["nrm"].to_numpy(dtype=np.float64)
-                j = qidx[qid]
-                dots = C @ Qm[j]                 # exact int64, < 2^53
-                cos = dots.astype(np.float64) / np.sqrt(nrm * qnrm[j])
-                kk = min(k, len(ids))
-                for i in np.lexsort((ids, -cos))[:kk]:
-                    res["query_id"].append(qid)
-                    res["neighbor_id"].append(ids[i])
-                    res["cosine"].append(cos[i])
-            yield pd.DataFrame(res)
-
-    local = cand.mapInPandas(rank, out_schema)
-    # cross-batch duplicates (one corpus row split across batches) carry
-    # bitwise-identical cosines — dropDuplicates is a tiny narrow shuffle
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (local.dropDuplicates(["query_id", "neighbor_id"])
-            .withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k))
+        bands = bands.join(F.broadcast(big), ["band", "digest"], "left_anti")
+    return bands
 
 
-def lsh_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        dim: int | None = None,
-                        max_bucket: int | None = None,
-                        persist: bool = True) -> DataFrame:
-    """N2 for LARGE query sides: fully distributed band join — neither
-    side is ever collected to the driver (:func:`lsh_ann` collects the
-    query side by contract and raises past ``max_queries``; this is the
-    path for query sets beyond that, e.g. corpus-vs-corpus probing).
+def lsh_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
+            id_col: str = "vec_id", vec_col: str = "embedding",
+            dim: int | None = None,
+            max_bucket: int | None = None) -> DataFrame:
+    """N2: LSH-bucketed approximate top-k (the 100 TB path) — a fully
+    distributed band join; neither side is collected to the driver, so
+    the query side may be as large as the corpus (corpus-vs-corpus
+    probing).
 
-    Identical arithmetic and ranking to :func:`lsh_ann` — exact int64
-    dots, the same sign-plane signatures, (cosine desc, neighbor_id asc)
-    order — so the two paths return IDENTICAL rows whenever both can run
-    (asserted in tests/test_similarity.py).
+    Candidates: corpus rows sharing >=1 of the ANN_BANDS signature bands
+    with the query; exact cosine + top-k among candidates. Returns the
+    same schema as :func:`cosine_topk` (rank may hold fewer than k rows
+    per query when buckets are sparse). Cosines are the exact int64
+    scheme and ranking is (cosine desc, neighbor_id asc), so the result
+    is bit-reproducible (graded against a SQL oracle).
 
     Plan shape:
-    - signatures on BOTH sides via the same broadcast-plane Arrow matmul
-      kernel; banding drops the vectors, so the band equi-join exchanges
-      only (id, band, digest) — narrow at any scale;
-    - candidate (qid, cid) pairs are deduped while still narrow, THEN the
-      quantized vectors are attached by two id-keyed shuffle joins (the
-      one wide exchange, proportional to candidate volume, which
-      ``max_bucket`` caps under skew — AQE may broadcast a small side);
-    - per-batch Arrow cosine (row-wise int64 einsum) + batch-local top-k
-      per query, then the global window top-k.
+    - signatures on BOTH sides via :func:`_lsh_bands`; banding drops the
+      vectors, so the band equi-join exchanges only (id, band, digest) —
+      narrow at any scale;
+    - candidate (qid, cid) pairs are deduped while still narrow, THEN
+      the quantized vectors are attached by :func:`_rank_narrow_pairs`
+      (the one wide exchange, proportional to candidate volume, which
+      ``max_bucket`` caps under skew; AQE broadcasts a small side, which
+      is the plan a small query set gets).
 
-    ``persist``: the signed corpus table is referenced by both the band
-    join and the re-rank attach; same caching convention as the dedup
-    pair operators (caller may opt out and manage cache lifetime)."""
-    import numpy as np
-    import pandas as pd
+    ``dim`` defaults to the query vectors' length, read with one bounded
+    ``first()`` on the query side; a ``dim`` that disagrees with it raises
+    here, and a corpus vector of another length raises in the signature
+    kernel (a silent mismatch would collapse all rows into one bucket).
 
+    ``max_bucket`` drops (band, digest) buckets holding more corpus rows
+    than the cap (see :func:`_lsh_bands`).
+
+    The quantized corpus and query frames are each read twice (banding
+    and the vector attach), so they are persisted and registered with
+    the open ``dedup.PersistScope``, like the dedup operators'
+    intermediates."""
     spark = corpus.sparkSession
     id_type = dict(corpus.dtypes)[id_col]
-    out_empty = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
+    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
+    first = queries.select(F.size(vec_col).alias("d")).first()
+    if first is None:
+        return _empty_topk(spark, out_schema)
     if dim is None:
-        first = queries.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            return (spark.createDataFrame([], out_empty)
-                    .withColumn("rank", F.lit(1).cast("int")))
         dim = int(first["d"])
-    P = _planes_matrix(dim)
-    bP = spark.sparkContext.broadcast(P)
-    mask = (1 << ANN_BAND_BITS) - 1
-    sig_schema = f"id {id_type}, q array<bigint>, nrm bigint, sig bigint"
-
-    def sign_kernel(batches):
-        Pm = bP.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"lsh_ann_distributed: vector dim {C.shape[1]} != {dim}")
-            out = pdf[["id", "q", "nrm"]].copy()
-            out["sig"] = _pack_signatures((C @ Pm.T) > 0)
-            yield out
-
-    def banded_ids(signed: DataFrame, id_alias: str) -> DataFrame:
-        return signed.select(
-            F.col("id").alias(id_alias),
-            F.explode(F.array(*[
-                F.struct(F.lit(b).cast("int").alias("band"),
-                         F.shiftright("sig", ANN_BAND_BITS * b)
-                         .bitwiseAND(F.lit(mask)).alias("digest"))
-                for b in range(ANN_BANDS)
-            ])).alias("bd"),
-        ).select(id_alias, F.col("bd.band").alias("band"),
-                 F.col("bd.digest").alias("digest"))
-
-    csigned = _quantized(corpus, id_col, vec_col).mapInPandas(
-        sign_kernel, sig_schema)
-    if persist:
-        csigned = csigned.persist()
-    qsigned = _quantized(queries, id_col, vec_col).mapInPandas(
-        sign_kernel, sig_schema)
-    if persist:
-        qsigned = qsigned.persist()
-
-    cb = banded_ids(csigned, "cid")
-    if max_bucket is not None:
-        big = (cb.groupBy("band", "digest").count()
-               .where(F.col("count") > max_bucket).select("band", "digest"))
-        cb = cb.join(F.broadcast(big), ["band", "digest"], "left_anti")
-    qb = banded_ids(qsigned, "qid")
-    # narrow candidate pairs, deduped BEFORE vectors are attached
+    elif first["d"] != dim:
+        raise ValueError(
+            f"lsh_ann: query vectors have dim {first['d']}, expected {dim}")
+    cq = _register(_quantized(corpus, id_col, vec_col).persist())
+    qq = _register(_quantized(queries, id_col, vec_col).persist())
+    cb = _lsh_bands(cq, dim, "lsh_ann", "cid", max_bucket)
+    qb = _lsh_bands(qq, dim, "lsh_ann", "qid")
     cand = (qb.join(cb, ["band", "digest"])
             .where(F.col("qid") != F.col("cid"))
             .select("qid", "cid").distinct())
-    return _rank_narrow_pairs(cand, csigned, qsigned, k, out_empty)
+    return _rank_narrow_pairs(cand, cq, qq, k, out_schema)
 
 
-def _rank_narrow_pairs(cand: DataFrame, csigned: DataFrame,
-                       qsigned: DataFrame, k: int,
-                       out_schema: str) -> DataFrame:
-    """Shared tail of the distributed ANN paths: attach the quantized
-    vectors to narrow (qid, cid) candidate pairs via two id-keyed joins
-    (the one exchange proportional to candidate volume), per-batch exact
-    int64 row-wise cosine with batch-local top-k, then the global window
-    top-k. Ranking is (cosine desc, neighbor_id asc) — identical to the
-    collected paths."""
+# Kept only because the benchmark (perfbench/wl_corpus.py) calls this
+# name and the benchmark's files change only in a benchmark change.
+lsh_ann_distributed = lsh_ann
+
+
+def _rank_narrow_pairs(cand: DataFrame, cq: DataFrame, qq: DataFrame,
+                       k: int, out_schema: str) -> DataFrame:
+    """Shared tail of the ANN paths: attach the quantized vectors of the
+    corpus ``cq`` and queries ``qq`` to narrow (qid, cid) candidate pairs
+    via two id-keyed joins (the one exchange proportional to candidate
+    volume), per-batch exact int64 row-wise cosine with batch-local
+    top-k, then the global window top-k by (cosine desc, neighbor_id
+    asc)."""
     import numpy as np
     import pandas as pd
 
     paired = (cand
-              .join(csigned.select(F.col("id").alias("cid"),
-                                   F.col("q").alias("cq"),
-                                   F.col("nrm").alias("cnrm")), "cid")
-              .join(qsigned.select(F.col("id").alias("qid"),
-                                   F.col("q").alias("qq"),
-                                   F.col("nrm").alias("qnrm")), "qid"))
+              .join(cq.select(F.col("id").alias("cid"),
+                              F.col("q").alias("cq"),
+                              F.col("nrm").alias("cnrm")), "cid")
+              .join(qq.select(F.col("id").alias("qid"),
+                              F.col("q").alias("qq"),
+                              F.col("nrm").alias("qnrm")), "qid"))
 
     def rank(batches):
         _worker.init()
@@ -596,7 +467,7 @@ def _train_centroids_kmeans(qdf: DataFrame, n_centroids: int,
 
 def _build_centroids(qdf: DataFrame, n_centroids: int, centroids: str,
                      sample_size: int, kmeans_iter: int):
-    """Coarse-centroid build shared by the IVF paths. Returns
+    """Coarse-centroid build of :func:`ivf_ann`. Returns
     (Cm int64 (c, dim), cnrm float64) — possibly empty on an empty
     corpus. Driver-side work is bounded by ``sample_size`` (kmeans) or
     ``n_centroids`` rows (lowest_id) regardless of corpus size."""
@@ -620,16 +491,11 @@ def ivf_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
             n_centroids: int | str = 16, n_probe: int = 2,
             centroids: str = "kmeans", sample_size: int = 4096,
-            kmeans_iter: int = 15,
-            max_queries: int | None = None,
-            on_large: str = "raise") -> DataFrame:
-    """N3: IVF-partitioned approximate top-k — the bucket-pruned scale path.
-
-    ``on_large`` mirrors :func:`lsh_ann`: ``"raise"`` (default) keeps the
-    documented driver-collect contract; ``"distributed"`` probes the
-    bound first (a LIMIT-pushed count) and transparently routes to
-    :func:`ivf_ann_distributed` — identical output, no driver
-    materialization of either side (requires an int ``n_centroids``).
+            kmeans_iter: int = 15) -> DataFrame:
+    """N3: IVF-partitioned approximate top-k — the bucket-pruned scale
+    path, fully distributed: neither corpus nor queries is collected to
+    the driver. The only driver-side step is the bounded centroid build
+    (``sample_size`` rows — the index-construction cost).
 
     Inverted-file design: every corpus vector is assigned to its nearest
     coarse centroid (exact int64 cosine, deterministic first-max
@@ -637,8 +503,7 @@ def ivf_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
     buckets, so the exact re-rank touches ~n_probe/n_centroids of the
     corpus. At warehouse scale the feature table is written PARTITIONED BY
     the centroid id, turning the probe into partition pruning at the scan
-    (only the probed buckets are read at all); in-query, the broadcast
-    probe join prunes rows before any cosine is computed.
+    (only the probed buckets are read at all).
 
     Centroid training (``centroids``):
     - ``"kmeans"`` (default): sampled spherical k-means — deterministic
@@ -648,149 +513,17 @@ def ivf_ann(corpus: DataFrame, queries: DataFrame, k: int = 5,
       ``sample_size`` accordingly.
     - ``"lowest_id"``: the n_centroids lowest-id vectors — the trivially
       deterministic stub, kept for comparison (tests assert kmeans recall
-      beats it on clustered data).
+      beats it on clustered data) and as the bit-exact SQL-oracle form.
     Assignment, probing, and re-rank are unchanged either way. Cosines are
     the exact quantized-int scheme of cosine_topk, so ranking among
     candidates is bit-identical to the brute-force baseline; recall vs N1
     is asserted in tests.
 
     ``n_centroids="auto"`` sets the IVF rule-of-thumb ``~sqrt(corpus)``
-    cells (one count of the corpus — amortized over the index lifetime;
-    at warehouse scale read the row count from table metadata instead) and
-    widens ``sample_size`` to keep >=32 sample points per centroid, so the
-    default cannot under-partition a large corpus.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_type = dict(corpus.dtypes)[id_col]
-    spark = corpus.sparkSession
-
-    if n_centroids == "auto":
-        n_centroids = max(1, int(np.sqrt(_corpus_rows(corpus))))
-        sample_size = max(sample_size, 32 * n_centroids)
-    elif not isinstance(n_centroids, int) or isinstance(n_centroids, bool):
-        raise ValueError(f"n_centroids must be an int or 'auto', got {n_centroids!r}")
-    if n_centroids <= 0:
-        raise ValueError(f"n_centroids must be > 0, got {n_centroids}")
-
-    if on_large not in ("raise", "distributed"):
-        raise ValueError(f"ivf_ann: unknown on_large={on_large!r}")
-    # guard the (driver-collected) query side BEFORE any expensive corpus
-    # work — an oversized query set must fail fast (or reroute), not
-    # after k-means; routing and collection share one bounded scan
-    q_rows = _collect_query_side(
-        _quantized(queries, id_col, vec_col), "ivf_ann", max_queries,
-        on_over="none" if on_large == "distributed" else "raise")
-    if q_rows is None:
-        return ivf_ann_distributed(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            n_centroids=n_centroids, n_probe=n_probe,
-            centroids=centroids, sample_size=sample_size,
-            kmeans_iter=kmeans_iter)
-    if not q_rows:
-        empty = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-        return spark.createDataFrame([], empty).withColumn("rank", F.lit(1).cast("int"))
-
-    Cm, cnrm = _build_centroids(
-        _quantized(corpus, id_col, vec_col), n_centroids, centroids,
-        sample_size, kmeans_iter)
-    if len(Cm) == 0:
-        empty = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-        return spark.createDataFrame([], empty).withColumn(
-            "rank", F.lit(1).cast("int"))
-
-    def _cos_to_centroids(Q, qnrm, Cm=Cm, cnrm=cnrm):
-        dots = Q @ Cm.T
-        return dots.astype(np.float64) / np.sqrt(qnrm[:, None] * cnrm[None, :])
-
-    assign_schema = f"id {id_type}, q array<bigint>, nrm bigint, cid int"
-
-    # centroid matrix: once per executor via broadcast, not per task
-    bc = spark.sparkContext.broadcast((Cm, cnrm))
-
-    def assign(batches):
-        _worker.init()
-        Cm, cnrm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            dots = Q @ Cm.T
-            cos = dots.astype(np.float64) / np.sqrt(nrm[:, None] * cnrm[None, :])
-            # np.argmax returns the FIRST max — lowest centroid id on ties
-            pdf = pdf[["id", "q", "nrm"]].copy()
-            pdf["cid"] = np.argmax(cos, axis=1).astype("int32")
-            yield pdf
-
-    assigned = _quantized(corpus, id_col, vec_col).mapInPandas(assign, assign_schema)
-
-    qids = [r["id"] for r in q_rows]
-    Qm = np.asarray([r["q"] for r in q_rows], dtype=np.int64)
-    qnrm = np.asarray([r["nrm"] for r in q_rows], dtype=np.float64)
-    qcos = _cos_to_centroids(Qm, qnrm)
-    probes = []
-    for i, qid in enumerate(qids):
-        order = np.argsort(-qcos[i], kind="stable")[:n_probe]
-        probes += [(qid, int(c)) for c in order]
-    probe_df = spark.createDataFrame(probes, f"qid {id_type}, cid int")
-
-    cand = assigned.join(F.broadcast(probe_df), "cid").select(
-        F.col("qid"), F.col("id"), F.col("q"), F.col("nrm"))
-
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-
-    # query matrix: once per executor via broadcast, not per task
-    bq = spark.sparkContext.broadcast(
-        (Qm, qnrm, {qid: i for i, qid in enumerate(qids)}))
-
-    def rank(batches):
-        _worker.init()
-        Qm, qnrm, qidx = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            res = {"query_id": [], "neighbor_id": [], "cosine": []}
-            for qid, grp in pdf.groupby("qid", sort=False):
-                C = np.asarray([np.asarray(v, dtype=np.int64) for v in grp["q"]])
-                ids = grp["id"].to_numpy()
-                nrm = grp["nrm"].to_numpy(dtype=np.float64)
-                j = qidx[qid]
-                dots = C @ Qm[j]
-                cos = dots.astype(np.float64) / np.sqrt(nrm * qnrm[j])
-                cos[ids == qid] = -np.inf
-                kk = min(k, len(ids))
-                for i in np.lexsort((ids, -cos))[:kk]:
-                    if np.isneginf(cos[i]):
-                        continue
-                    res["query_id"].append(qid)
-                    res["neighbor_id"].append(ids[i])
-                    res["cosine"].append(cos[i])
-            yield pd.DataFrame(res)
-
-    local = cand.mapInPandas(rank, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def ivf_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        n_centroids: int = 16, n_probe: int = 2,
-                        centroids: str = "kmeans", sample_size: int = 4096,
-                        kmeans_iter: int = 15,
-                        persist: bool = True) -> DataFrame:
-    """N3 for LARGE query sides: fully distributed IVF probing — neither
-    corpus nor queries is collected to the driver (:func:`ivf_ann`
-    collects the query side by contract and raises past ``max_queries``;
-    this is the path for corpus-vs-corpus probing). The only driver-side
-    steps are the bounded centroid build (``sample_size`` rows — the
-    index-construction cost, shared with ivf_ann) and nothing else.
-
-    Identical assignment (argmax exact-int cosine, first-max tiebreak),
-    probe selection (stable argsort, top ``n_probe``), and ranking
-    (cosine desc, neighbor_id asc) to :func:`ivf_ann`, so the two paths
-    return IDENTICAL rows whenever both can run (asserted in tests).
+    cells (the row count comes from parquet footers when the corpus is a
+    bare file scan, else one count) and widens ``sample_size`` to keep
+    >=32 sample points per centroid, so the default cannot
+    under-partition a large corpus.
 
     Plan shape:
     - centroid matrix broadcast once per executor; corpus AND query
@@ -805,15 +538,16 @@ def ivf_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
       :func:`_rank_narrow_pairs` tail. Hot-cell skew is bounded by
       sizing ``n_centroids ~ sqrt(corpus)`` (cells ~ sqrt(n) rows) and
       falls under AQE's skew-join handling on the attach joins.
-    """
+
+    The quantized corpus and query frames are persisted and registered
+    with the open ``dedup.PersistScope`` (each is read by the assignment
+    and by the vector attach)."""
     import numpy as np
 
     spark = corpus.sparkSession
     id_type = dict(corpus.dtypes)[id_col]
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
 
-    # same n_centroids contract as ivf_ann (0 would otherwise return an
-    # empty result silently via limit(0) on the lowest_id path)
     if n_centroids == "auto":
         n_centroids = max(1, int(np.sqrt(_corpus_rows(corpus))))
         sample_size = max(sample_size, 32 * n_centroids)
@@ -823,19 +557,18 @@ def ivf_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
     if n_centroids <= 0:
         raise ValueError(f"n_centroids must be > 0, got {n_centroids}")
 
-    Cm, cnrm = _build_centroids(
-        _quantized(corpus, id_col, vec_col), n_centroids, centroids,
-        sample_size, kmeans_iter)
+    cq = _register(_quantized(corpus, id_col, vec_col).persist())
+    Cm, cnrm = _build_centroids(cq, n_centroids, centroids, sample_size,
+                                kmeans_iter)
     if len(Cm) == 0:
-        return (spark.createDataFrame([], out_schema)
-                .withColumn("rank", F.lit(1).cast("int")))
+        return _empty_topk(spark, out_schema)
+    qq = _register(_quantized(queries, id_col, vec_col).persist())
     bc = spark.sparkContext.broadcast((Cm, cnrm))
-    n_pr = min(n_probe, len(Cm))
 
-    def assign_kernel(n_cells):
-        """Arrow matmul against the broadcast centroids; top-``n_cells``
-        cell ids per row (first-max/stable order — bit-identical to the
-        collected path's np.argmax / stable argsort)."""
+    def nearest_cells(n_cells):
+        """Arrow matmul against the broadcast centroids: the ``n_cells``
+        nearest cell ids per row, nearest first (stable order — ties go
+        to the lowest cell id)."""
         def kernel(batches):
             _worker.init()
             Cm, cnrm = bc.value
@@ -847,34 +580,21 @@ def ivf_ann_distributed(corpus: DataFrame, queries: DataFrame, k: int = 5,
                 nrm = pdf["nrm"].to_numpy(dtype=np.float64)
                 cos = (Q @ Cm.T).astype(np.float64) / np.sqrt(
                     nrm[:, None] * cnrm[None, :])
-                out = pdf[["id", "q", "nrm"]].copy()
-                if n_cells == 1:
-                    out["cids"] = [[int(c)] for c in np.argmax(cos, axis=1)]
-                else:
-                    order = np.argsort(-cos, axis=1, kind="stable")
-                    out["cids"] = [[int(c) for c in row[:n_cells]]
-                                   for row in order]
+                order = np.argsort(-cos, axis=1, kind="stable")[:, :n_cells]
+                out = pdf[["id"]].copy()
+                out["cids"] = [[int(c) for c in row] for row in order]
                 yield out
         return kernel
 
-    sig_schema = f"id {id_type}, q array<bigint>, nrm bigint, cids array<int>"
-    csigned = _quantized(corpus, id_col, vec_col).mapInPandas(
-        assign_kernel(1), sig_schema)
-    if persist:
-        csigned = csigned.persist()
-    qsigned = _quantized(queries, id_col, vec_col).mapInPandas(
-        assign_kernel(n_pr), sig_schema)
-    if persist:
-        qsigned = qsigned.persist()
-
-    probes = qsigned.select(F.col("id").alias("qid"),
-                            F.explode("cids").alias("cid"))
-    corpus_cells = csigned.select(F.col("id").alias("cand_id"),
-                                  F.element_at("cids", 1).alias("cid"))
+    cells_schema = f"id {id_type}, cids array<int>"
+    probes = qq.mapInPandas(nearest_cells(n_probe), cells_schema).select(
+        F.col("id").alias("qid"), F.explode("cids").alias("cid"))
+    corpus_cells = cq.mapInPandas(nearest_cells(1), cells_schema).select(
+        F.col("id").alias("cand_id"), F.element_at("cids", 1).alias("cid"))
     cand = (probes.join(corpus_cells, "cid")
             .where(F.col("qid") != F.col("cand_id"))
             .select("qid", F.col("cand_id").alias("cid")))
-    return _rank_narrow_pairs(cand, csigned, qsigned, k, out_schema)
+    return _rank_narrow_pairs(cand, cq, qq, k, out_schema)
 
 
 def _train_pq_codebooks(qd: DataFrame, m: int, n_codes: int,
@@ -1039,24 +759,22 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_type = dict(corpus.dtypes)[id_col]
     spark = corpus.sparkSession
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, dist bigint"
-    empty = lambda: spark.createDataFrame([], out_schema).withColumn(  # noqa: E731
-        "rank", F.lit(1).cast("int"))
 
     q_rows = _collect_query_side(
         _quantized(queries, id_col, vec_col), "pq_topk", max_queries)
     if not q_rows:
-        return empty()
+        return _empty_topk(spark, out_schema)
     qd = _quantized(corpus, id_col, vec_col)
     first = qd.select(F.size("q").alias("d")).first()
     if first is None:
-        return empty()
+        return _empty_topk(spark, out_schema)
     dim = int(first["d"])
     if dim % m != 0:
         raise ValueError(f"pq_topk: dim {dim} not divisible by m={m}")
     CB = _train_pq_codebooks(qd, m, n_codes, codebooks,
                              sample_size, kmeans_iter)
     if CB.shape[1] == 0:
-        return empty()
+        return _empty_topk(spark, out_schema)
 
     qids = [r["id"] for r in q_rows]
     Qm = np.asarray([r["q"] for r in q_rows], dtype=np.int64)
@@ -1177,17 +895,15 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_type = dict(corpus.dtypes)[id_col]
     spark = corpus.sparkSession
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, dist bigint"
-    empty = lambda: spark.createDataFrame([], out_schema).withColumn(  # noqa: E731
-        "rank", F.lit(1).cast("int"))
 
     q_rows = _collect_query_side(
         _quantized(queries, id_col, vec_col), "ivf_pq_topk", max_queries)
     if not q_rows:
-        return empty()
+        return _empty_topk(spark, out_schema)
     qd = _quantized(corpus, id_col, vec_col)
     first = qd.select(F.size("q").alias("d")).first()
     if first is None:
-        return empty()
+        return _empty_topk(spark, out_schema)
     dim = int(first["d"])
     if dim % m != 0:
         raise ValueError(f"ivf_pq_topk: dim {dim} not divisible by m={m}")
@@ -1197,7 +913,7 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     CB = _train_pq_codebooks(qd, m, n_codes, codebooks,
                              sample_size, kmeans_iter)
     if len(CC) == 0 or CB.shape[1] == 0:
-        return empty()
+        return _empty_topk(spark, out_schema)
 
     qids = [r["id"] for r in q_rows]
     Qm = np.asarray([r["q"] for r in q_rows], dtype=np.int64)
@@ -1432,8 +1148,7 @@ def ivf_pq_probe(spark, root: str, queries: DataFrame, k: int = 5,
     q_rows = _collect_query_side(
         _quantized(queries, id_col, vec_col), "ivf_pq_probe", max_queries)
     if not q_rows:
-        return spark.createDataFrame([], out_schema).withColumn(
-            "rank", F.lit(1).cast("int"))
+        return _empty_topk(spark, out_schema)
     qids = [r["id"] for r in q_rows]
     Qm = np.asarray([r["q"] for r in q_rows], dtype=np.int64)
     if Qm.shape[1] != dim_full:

@@ -213,7 +213,7 @@ def test_scoped_rotation_bounds_cache_to_two_queries():
 
     def fake(spark, sf_dir):
         # record which scope was active during construction
-        calls.append(_dd.PersistScope._active)
+        calls.append(_dd.PersistScope._active.scope)
         return None
 
     wrapped = ENTRY._scoped(fake)
@@ -221,7 +221,38 @@ def test_scoped_rotation_bounds_cache_to_two_queries():
         wrapped(None, None)
     assert len(ENTRY._QUERY_SCOPES) == 2
     # the active scope is restored after each call
-    assert _dd.PersistScope._active is None
+    assert _dd.PersistScope._active.scope is None
     # each call saw its own fresh scope
     assert len({id(s) for s in calls}) == 5
     ENTRY._QUERY_SCOPES.clear()
+
+
+def test_stream_ingest_dedup_stops_on_timeout_and_cleans_up(spark, monkeypatch):
+    """A D11 ingest stream that has not terminated when awaitTermination
+    gives up is stopped and raises, and the query's four temp
+    directories are removed either way."""
+    import tempfile
+
+    import profet_spark.streaming as streaming
+
+    made, stopped = [], []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(**kw):
+        made.append(real_mkdtemp(**kw))
+        return made[-1]
+
+    class StuckQuery:
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            stopped.append(True)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(streaming, "ingest_stream",
+                        lambda *a, **kw: StuckQuery())
+    with pytest.raises(TimeoutError):
+        ENTRY._q_stream_ingest_dedup(spark, "/root/testdata/sf0.001")
+    assert stopped == [True]
+    assert len(made) == 4 and not any(os.path.exists(d) for d in made)

@@ -144,17 +144,37 @@ def test_ivf_kmeans_centroids_deterministic(emb):
     assert np.array_equal(a, b)
 
 
+def _plan_nodes(node):
+    """Pre-order walk of a JVM physical plan, through the AQE wrapper."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
 def test_lsh_ann_exchanges_never_carry_vectors(emb):
-    """Scale invariant: the only exchanges in the ANN plan are the winner
-    dedup/window (query_id, neighbor_id, cosine) and the broadcast of the
-    query band digests — raw vectors must never cross an exchange."""
+    """Scale invariant: candidate pairs are deduped while still narrow.
+    No exchange under the (qid, cid) distinct — the band join and the
+    distinct itself — may carry a vector column (q, nrm, embedding);
+    vectors are attached only to the deduped pairs."""
     df, _ = emb
     plan = (similarity.lsh_ann(df, df.where(df.vec_id < 5), k=5, dim=DIM)
-            ._jdf.queryExecution().executedPlan().toString())
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+            ._jdf.queryExecution().executedPlan())
+
+    def names(node):
+        out = node.output()
+        return [out.apply(i).name() for i in range(out.size())]
+
+    distinct = next(n for n in _plan_nodes(plan)
+                    if n.nodeName() == "HashAggregate"
+                    and names(n) == ["qid", "cid"])
+    exchanges = [n for n in _plan_nodes(distinct)
+                 if "Exchange" in n.nodeName()]
     assert exchanges
-    for ln in exchanges:
-        assert "q#" not in ln and "embedding" not in ln and "nrm" not in ln, ln
+    for n in exchanges:
+        assert not {"q", "nrm", "embedding"} & set(names(n)), n.toString()
 
 
 def test_ivf_assignment_partition_pruning(spark, emb, tmp_path):
@@ -255,52 +275,18 @@ def test_ann_query_side_collect_is_bounded(emb):
     """An oversized query set must fail with a clear error, not a driver
     OOM: the guard reads at most max_queries+1 rows (ADVICE r2)."""
     df, _ = emb
-    for fn in (similarity.cosine_topk, similarity.lsh_ann, similarity.ivf_ann):
-        with pytest.raises(ValueError, match="query side exceeds"):
-            fn(df, df, k=3, max_queries=10)
-
-
-def test_lsh_ann_distributed_equals_collected(emb):
-    """The distributed band join must return IDENTICAL rows to the
-    driver-collected path (same signatures, same exact cosine, same
-    (cosine desc, id asc) ranking)."""
-    df, _ = emb
-    q = df.where(df.vec_id < 15)
-    a = (similarity.lsh_ann(df, q, k=5, dim=DIM)
-         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    b = (similarity.lsh_ann_distributed(df, q, k=5, dim=DIM)
-         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_lsh_ann_on_large_routes_to_distributed(emb):
-    """on_large='distributed' silently takes the distributed path when the
-    query side exceeds max_queries (where 'raise' would error)."""
-    df, _ = emb
-    q = df.where(df.vec_id < 15)
     with pytest.raises(ValueError, match="query side exceeds"):
-        similarity.lsh_ann(df, q, k=3, dim=DIM, max_queries=5)
-    got = (similarity.lsh_ann(df, q, k=3, dim=DIM, max_queries=5,
-                              on_large="distributed")
-           .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    want = (similarity.lsh_ann_distributed(df, q, k=3, dim=DIM)
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, want)
-    # under the cap the collected path is used and agrees anyway
-    small = (similarity.lsh_ann(df, df.where(df.vec_id < 3), k=3, dim=DIM,
-                                max_queries=5, on_large="distributed").toPandas())
-    assert set(small.query_id) <= {0, 1, 2}
+        similarity.cosine_topk(df, df, k=3, max_queries=10)
 
 
 def test_lsh_ann_distributed_max_bucket_and_empty_query(emb):
     """max_bucket drops oversized corpus bands (results stay a valid
     subset: every surviving (query, neighbor) cosine matches the exact
     numpy value); an empty query side yields an empty, correctly-typed
-    frame on the distributed path."""
+    frame from both LSH and IVF."""
     df, vecs = emb
     q = df.where(df.vec_id < 8)
-    got = similarity.lsh_ann_distributed(df, q, k=5, dim=DIM,
-                                         max_bucket=10).toPandas()
+    got = similarity.lsh_ann(df, q, k=5, dim=DIM, max_bucket=10).toPandas()
     _, cos = _numpy_topk(vecs, range(8), 5)
     for row in got.itertuples():
         assert row.cosine == pytest.approx(
@@ -308,48 +294,13 @@ def test_lsh_ann_distributed_max_bucket_and_empty_query(emb):
     assert (got.groupby("query_id")["rank"].apply(
         lambda s: list(s) == list(range(1, len(s) + 1)))).all()
 
-    empty = similarity.lsh_ann_distributed(
-        df, df.where(df.vec_id < 0), k=5, dim=DIM).toPandas()
-    assert empty.empty
-    assert list(empty.columns) == ["query_id", "neighbor_id", "cosine", "rank"]
-
-
-def test_ivf_ann_distributed_equals_collected(emb):
-    """The distributed IVF probe must return IDENTICAL rows to the
-    driver-collected path for both centroid strategies (same assignment
-    argmax, same stable probe order, same exact cosine ranking)."""
-    df, _ = emb
-    q = df.where(df.vec_id < 12)
-    for strat in ("lowest_id", "kmeans"):
-        a = (similarity.ivf_ann(df, q, k=4, n_centroids=8, n_probe=3,
-                                centroids=strat)
-             .toPandas().sort_values(["query_id", "rank"])
-             .reset_index(drop=True))
-        b = (similarity.ivf_ann_distributed(df, q, k=4, n_centroids=8,
-                                            n_probe=3, centroids=strat)
-             .toPandas().sort_values(["query_id", "rank"])
-             .reset_index(drop=True))
-        pd.testing.assert_frame_equal(a, b), strat
-
-    empty = similarity.ivf_ann_distributed(
-        df, df.where(df.vec_id < 0), k=3, n_centroids=4).toPandas()
-    assert empty.empty
-    assert list(empty.columns) == ["query_id", "neighbor_id", "cosine", "rank"]
-
-
-def test_ivf_ann_on_large_routes_to_distributed(emb):
-    df, _ = emb
-    q = df.where(df.vec_id < 12)
-    with pytest.raises(ValueError, match="query side exceeds"):
-        similarity.ivf_ann(df, q, k=3, n_centroids=8, max_queries=5)
-    got = (similarity.ivf_ann(df, q, k=3, n_centroids=8, n_probe=3,
-                              centroids="lowest_id", max_queries=5,
-                              on_large="distributed")
-           .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    want = (similarity.ivf_ann_distributed(df, q, k=3, n_centroids=8,
-                                           n_probe=3, centroids="lowest_id")
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, want)
+    no_queries = df.where(df.vec_id < 0)
+    for empty in (
+        similarity.lsh_ann(df, no_queries, k=5, dim=DIM).toPandas(),
+        similarity.ivf_ann(df, no_queries, k=3, n_centroids=4).toPandas(),
+    ):
+        assert empty.empty
+        assert list(empty.columns) == ["query_id", "neighbor_id", "cosine", "rank"]
 
 
 def test_zero_norm_vectors_excluded_everywhere(spark):
@@ -378,7 +329,6 @@ def test_zero_norm_vectors_excluded_everywhere(spark):
     for res in (
         similarity.lsh_ann(df, q, k=25).toPandas(),
         similarity.ivf_ann(df, q, k=25, n_centroids=2, n_probe=2).toPandas(),
-        similarity.lsh_ann_distributed(df, q, k=25).toPandas(),
     ):
         assert not res.cosine.isna().any()
         assert 7 not in set(res.query_id) and 7 not in set(res.neighbor_id)
@@ -396,10 +346,8 @@ def test_ivf_n_centroids_zero_raises(emb):
     q = df.where(df.vec_id < 3)
     with pytest.raises(ValueError, match="n_centroids must be > 0"):
         similarity.ivf_ann(df, q, n_centroids=0)
-    with pytest.raises(ValueError, match="n_centroids must be > 0"):
-        similarity.ivf_ann_distributed(df, q, n_centroids=0)
     with pytest.raises(ValueError, match="n_centroids"):
-        similarity.ivf_ann_distributed(df, q, n_centroids=True)
+        similarity.ivf_ann(df, q, n_centroids=True)
 
 
 # --- N4 product quantization: compressed store + ADC top-k ---
