@@ -70,7 +70,7 @@ def pit_features_events(spark, sf_dir, n_parts):
 
 def caption_descriptors(spark, snap_text):
     """Full 340-feature ProFET-analog vector over native captions, packed
-    array<double> layout (mapInArrow) — same values as the struct path
+    array<double> layout (scalar Arrow UDF) — same values as the struct path
     (tests/test_descriptors.py), ~3x the throughput at full concurrency."""
     return td.add_caption_features_packed(snap_text)
 

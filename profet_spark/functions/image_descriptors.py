@@ -3,9 +3,13 @@
 The ProFET "sequence" for the image payload is the pixel-statistic
 stream: per-row luminance means form a 1-D numeric sequence that gets the
 same windowed-profile treatment as the caption's property profile
-(SURVEY.md §1.2). Decode runs in ``mapInPandas`` (iterator-of-batches,
-U3) so per-batch init is amortized and Arrow batch size bounds memory
-when multi-KB ``bytes`` values flow through (SURVEY.md §4.3).
+(SURVEY.md §1.2). Decode runs in a scalar Arrow UDF (U3) that receives
+only the ``bytes`` and ``fmt`` columns, one Arrow batch at a time, so
+Arrow batch size bounds memory when multi-KB ``bytes`` values flow
+through (SURVEY.md §4.3) and no other column leaves the JVM. Each image
+decodes on its own; the stats and hashes then run once per group of
+same-shape images (:func:`compute_image_stats_batch`), with
+:func:`compute_image_stats` kept as the per-image reference.
 
 phash ops (C8) stay JVM-side: nibble extraction and Hamming distance to
 the previous snapshot are pure built-in bit expressions.
@@ -13,16 +17,21 @@ the previous snapshot are pure built-in bit expressions.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from profet_spark.imaging import average_hash, decode, dhash, luminance, phash_dct
+from profet_spark.imaging import (
+    average_hash,
+    block_mean_resize,
+    dct_basis,
+    decode,
+    dhash,
+    luminance,
+    phash_dct,
+)
 
 IMG_FEATURES = [
     ("lum_mean", T.DoubleType()),
@@ -44,12 +53,9 @@ _INT_FEATURES = {"phash_check", "phash_dct", "dhash"}
 _PROFILE_WINDOW = 5
 
 
-def compute_image_stats(data: bytes, fmt: str) -> dict:
-    """Pixel-stat vector for one image. The oracle path for tests.
-
-    Only the specific codec failure modes a malformed/unsupported payload
-    can produce are mapped to decode_ok=False; a programming bug in the
-    decoder raises instead of silently yielding zero-features."""
+def _decode_or_none(data, fmt):
+    """Decoded ``uint8[h, w, 3]`` array, or None for a malformed or
+    unsupported payload (the ``decode_ok=False`` row)."""
     import struct
     import zlib
     try:
@@ -59,8 +65,19 @@ def compute_image_stats(data: bytes, fmt: str) -> dict:
             # (bytes(None) would raise an uncaught TypeError and kill the
             # whole stage)
             raise ValueError("NULL image bytes")
-        arr = decode(bytes(data), fmt)
+        return decode(bytes(data), fmt)
     except (NotImplementedError, ValueError, zlib.error, struct.error):
+        return None
+
+
+def compute_image_stats(data: bytes, fmt: str) -> dict:
+    """Pixel-stat vector for one image. The oracle path for tests.
+
+    Only the specific codec failure modes a malformed/unsupported payload
+    can produce are mapped to decode_ok=False; a programming bug in the
+    decoder raises instead of silently yielding zero-features."""
+    arr = _decode_or_none(data, fmt)
+    if arr is None:
         return {n: (False if n == "decode_ok" else (0 if n in _INT_FEATURES else 0.0))
                 for n, _ in IMG_FEATURES}
     lum = luminance(arr)
@@ -93,25 +110,110 @@ def compute_image_stats(data: bytes, fmt: str) -> dict:
     }
 
 
+def _pack64(bits: np.ndarray) -> np.ndarray:
+    """Row-wise ``_pack_bits_int64``: 64 bits per row, MSB first, into a
+    signed int64."""
+    return np.packbits(bits, axis=1).view(">i8")[:, 0].astype(np.int64)
+
+
+def _stats_same_shape(arr: np.ndarray) -> dict[str, np.ndarray]:
+    """Every :data:`IMG_FEATURES` column but ``decode_ok`` for a stack of
+    same-shape images ``uint8[n, h, w, 3]``: the arithmetic of
+    :func:`compute_image_stats` and the three hashes with one leading
+    image axis, each reduction over the same contiguous run of values in
+    the same order, so every value is identical to the per-image path."""
+    n, h, w, _ = arr.shape
+    lum = luminance(arr)
+    flat = lum.reshape(n, h * w)
+    out = {"lum_mean": flat.mean(axis=1), "lum_var": flat.var(axis=1),
+           "lum_min": flat.min(axis=1), "lum_max": flat.max(axis=1)}
+    if w > 1:
+        out["edge_density"] = np.abs(np.diff(lum, axis=2)).reshape(n, -1).mean(axis=1)
+    else:
+        out["edge_density"] = np.zeros(n)
+    row_means = lum.mean(axis=2)
+    k = _PROFILE_WINDOW
+    if h >= k:
+        p = h - k + 1
+        prof = np.zeros((n, p))
+        for j in range(k):  # the same sequential adds as the per-image path
+            prof += row_means[:, j : j + p]
+        prof /= k
+        out["rowprof_max"], out["rowprof_min"] = prof.max(axis=1), prof.min(axis=1)
+        out["rowprof_mean"] = prof.mean(axis=1)
+    else:
+        for name in ("rowprof_max", "rowprof_min", "rowprof_mean"):
+            out[name] = np.zeros(n)
+    # aHash (average_hash): 8x8 block means of the top-left multiple-of-8 crop
+    hh, ww = (h // 8) * 8, (w // 8) * 8
+    if hh and ww:
+        blocks = (lum[:, :hh, :ww].reshape(n, 8, hh // 8, 8, ww // 8)
+                  .mean(axis=(2, 4)).reshape(n, 64))
+        out["phash_check"] = _pack64(blocks > blocks.mean(axis=1)[:, None])
+    else:
+        out["phash_check"] = np.zeros(n, dtype=np.int64)
+    # pHash (phash_dct): the 8x8 low band of a 32x32 DCT vs its AC median
+    c = dct_basis(32)
+    d = c @ block_mean_resize(lum, 32) @ c.T
+    low = d[:, :8, :8].reshape(n, 64)
+    out["phash_dct"] = _pack64(low > np.median(low[:, 1:], axis=1)[:, None])
+    # dHash: left < right over an 8x9 block-mean grid
+    g = block_mean_resize(lum, 8, 9)
+    out["dhash"] = _pack64((g[:, :, :-1] < g[:, :, 1:]).reshape(n, 64))
+    return out
+
+
+def compute_image_stats_batch(datas, fmts) -> dict[str, np.ndarray]:
+    """:func:`compute_image_stats` for a batch, as one array per
+    :data:`IMG_FEATURES` column. Each payload decodes on its own; the
+    stats and hashes then run once per group of same-shape images.
+    Values equal the per-image path exactly (tests/test_imaging.py)."""
+    arrs = [_decode_or_none(b, f) for b, f in zip(datas, fmts)]
+    n = len(arrs)
+    out = {name: np.zeros(n, dtype=np.int64 if name in _INT_FEATURES else np.float64)
+           for name, _ in IMG_FEATURES}
+    out["decode_ok"] = np.array([a is not None for a in arrs], dtype=bool)
+    groups: dict[tuple[int, int], list[int]] = {}
+    for i, a in enumerate(arrs):
+        if a is not None:
+            groups.setdefault(a.shape[:2], []).append(i)
+    for idx in groups.values():
+        stats = _stats_same_shape(np.stack([arrs[i] for i in idx]))
+        for name, vals in stats.items():
+            out[name][idx] = vals
+    return out
+
+
+def image_stats_udf():
+    """``arrow_udf(bytes, fmt) -> struct<IMG_FEATURES>`` over
+    :func:`compute_image_stats_batch`. The DataFrame API and the SQL
+    registry both call this."""
+    import pyarrow as pa
+    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+
+    names = [n for n, _ in IMG_FEATURES]
+    schema = T.StructType([T.StructField(n, t, True) for n, t in IMG_FEATURES])
+
+    @arrow_udf(schema, ArrowUDFType.SCALAR)
+    def image_stats(data, fmt):
+        stats = compute_image_stats_batch(data.to_pylist(), fmt.to_pylist())
+        return pa.StructArray.from_arrays([stats[n] for n in names], names)
+
+    return image_stats
+
+
 def add_image_features(
     df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt", drop_bytes: bool = True
 ) -> DataFrame:
-    """Decode + pixel stats through mapInPandas. ``drop_bytes`` prunes the
-    binary column from the output so downstream stages never shuffle it."""
-    in_fields = [f for f in df.schema.fields if not (drop_bytes and f.name == bytes_col)]
-    schema = T.StructType(in_fields + [T.StructField(n, t, True) for n, t in IMG_FEATURES])
-    keep = [f.name for f in in_fields]
-    feat_names = [n for n, _ in IMG_FEATURES]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            stats = [compute_image_stats(b, f) for b, f in zip(pdf[bytes_col], pdf[fmt_col])]
-            sdf = pd.DataFrame(stats, index=pdf.index)
-            yield pd.concat([pdf[keep], sdf[feat_names]], axis=1)
-
-    return df.mapInPandas(kernel, schema=schema)
+    """Decode + pixel stats through one scalar Arrow UDF that reads only
+    ``bytes`` and ``fmt``; every other column stays in the JVM. The
+    :data:`IMG_FEATURES` columns are appended after the input columns.
+    ``drop_bytes`` prunes the binary column from the output so downstream
+    stages never shuffle it."""
+    keep = [c for c in df.columns if not (drop_bytes and c == bytes_col)]
+    stats = image_stats_udf()(F.col(bytes_col), F.col(fmt_col)).alias("__img")
+    return df.select(*keep, stats).select(
+        *keep, *[F.col("__img")[n].alias(n) for n, _ in IMG_FEATURES])
 
 
 def phash_nibbles(df: DataFrame, phash_col: str = "phash", out_col: str = "nibbles") -> DataFrame:
@@ -190,7 +292,7 @@ def curate_images(df: DataFrame, *, bytes_col: str = "bytes",
     Tier 1 (metadata): resolution floor, aspect-ratio cap, format
     allowlist — plain Catalyst predicates over scalar columns, pushed to
     the parquet scan. **Bytes of rows failing tier 1 are never decoded**
-    (the filter runs before ``mapInPandas``), which is the property that
+    (the filter runs before the image UDF), which is the property that
     matters at 10^12 images: the binary column is only read for rows
     that survive the cheap scalar gate.
 

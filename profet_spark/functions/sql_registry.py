@@ -3,72 +3,40 @@
 Upstream ProFET is a Python library — its features are only reachable
 from Python (`[R] FeatureGen.py ≈L40-120`, the `Get_Protein_Feat` dict
 builder). A Spark-native engine should also serve `spark.sql(...)`
-users, so this module registers the caption-descriptor kernel as
+users, so this module registers the descriptor kernels as
 session-scoped SQL functions:
 
     >>> register_sql_functions(spark)
-    ['profet_features', 'profet_features_struct']
+    ['profet_features', 'profet_features_struct', 'profet_image_stats']
     >>> spark.sql("SELECT image_id, profet_features(caption) AS f FROM snaps")
 
-Both registrations are Arrow-batched ``pandas_udf``s over the SAME
-kernel as the DataFrame API (``compute_features_batch``) — no
-row-at-a-time Python anywhere, same golden-vector semantics:
+Each function is the SAME Arrow-batched UDF the DataFrame API uses, so
+there is one kernel per function and no row-at-a-time Python anywhere:
 
 - ``profet_features(caption) -> array<double>``: the packed layout
   (FEATURE_NAMES order; index features with ``element_at(f, i)`` and
-  :func:`profet_spark.functions.text_descriptors.feature_index`).
+  :func:`profet_spark.functions.text_descriptors.feature_index`) — the
+  scalar Arrow UDF behind ``add_caption_features_packed``.
 - ``profet_features_struct(caption) -> struct<...340 fields>``: named
   fields, so ``profet_features_struct(caption).entropy`` works and
   Catalyst prunes unused fields from the struct projection.
 - ``profet_image_stats(bytes, fmt) -> struct<lum_*, edge_density,
-  rowprof_*, phash_check, phash_dct, decode_ok>``: the U3 pixel-stat kernel
-  (``image_descriptors.compute_image_stats`` — decode failures map to
+  rowprof_*, phash_check, phash_dct, dhash, decode_ok>``: the scalar
+  Arrow UDF behind ``add_image_features`` (decode failures map to
   ``decode_ok = false``, never a stage kill), for SQL pipelines over the
   image axis, e.g. ``profet_image_stats(bytes, fmt).phash_check``.
-
-For bulk scoring prefer the DataFrame API's
-:func:`~profet_spark.functions.text_descriptors.add_caption_features_packed`
-(``mapInArrow``): the SQL array UDF pays one extra per-row list build on
-output (~1.3x the packed path, still Arrow-vectorized), which is the
-standing cost of Spark's SQL UDF boundary, not of the kernel.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession
 
-from profet_spark.functions.image_descriptors import (
-    IMG_FEATURES,
-    compute_image_stats,
-)
+from profet_spark.functions.image_descriptors import image_stats_udf
 from profet_spark.functions.text_descriptors import (
     FEATURE_NAMES,
     caption_features,
-    compute_features_batch,
+    features_udf,
 )
-
-
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
-def _features_array(captions: pd.Series) -> pd.Series:
-    feats = compute_features_batch(captions)
-    mat = feats.to_numpy(dtype=np.float64, copy=False)
-    return pd.Series(list(mat))
-
-
-_IMAGE_STATS_SCHEMA = T.StructType(
-    [T.StructField(n, t, True) for n, t in IMG_FEATURES])
-
-
-@F.pandas_udf(_IMAGE_STATS_SCHEMA)
-def _image_stats(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    # the per-row decode loop is the same shape as the U3 mapInPandas
-    # kernel: variable-length binary payloads decode one at a time by
-    # nature; the Arrow batch boundary is what's vectorized
-    return pd.DataFrame([compute_image_stats(b, f)
-                         for b, f in zip(data, fmt)],
-                        columns=[n for n, _ in IMG_FEATURES])
 
 
 def register_sql_functions(spark: SparkSession,
@@ -79,9 +47,9 @@ def register_sql_functions(spark: SparkSession,
     Idempotent (re-registering replaces)."""
     names = [f"{prefix}features", f"{prefix}features_struct",
              f"{prefix}image_stats"]
-    spark.udf.register(names[0], _features_array)
+    spark.udf.register(names[0], features_udf())
     spark.udf.register(names[1], caption_features)
-    spark.udf.register(names[2], _image_stats)
+    spark.udf.register(names[2], image_stats_udf())
     return names
 
 

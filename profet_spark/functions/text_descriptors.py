@@ -527,50 +527,49 @@ def _flatten_arrow(caps):
     return codes, row, lens, starts
 
 
+def features_udf():
+    """``arrow_udf(caption) -> array<double>``: the whole packed vector
+    (FEATURE_NAMES order) per caption, for one Arrow array of captions
+    at a time. Captions are read from the Arrow buffers (no per-row
+    Python) and the output is one list array over a single (n, 340)
+    buffer. The DataFrame API and the SQL registry both call this."""
+    import pyarrow as pa
+    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+
+    nfeat = len(FEATURE_NAMES)
+
+    @arrow_udf(T.ArrayType(T.DoubleType(), False), ArrowUDFType.SCALAR)
+    def profet_features(caps):
+        nrows = len(caps)
+        mat = np.zeros((nrows, nfeat), dtype=np.float64)
+        if nrows:
+            codes, row, lens, starts = _flatten_arrow(caps)
+            out = _compute_from_flat(codes, row, lens, starts, nrows)
+            for j, name in enumerate(FEATURE_NAMES):
+                mat[:, j] = out[name]
+        return pa.FixedSizeListArray.from_arrays(
+            pa.array(mat.ravel(), type=pa.float64()), nfeat
+        ).cast(pa.list_(pa.float64()))
+
+    return profet_features
+
+
 def add_caption_features_packed(
     df: DataFrame, caption_col: str = "caption", out_col: str = "features",
     drop_caption: bool = True,
 ) -> DataFrame:
-    """The high-throughput descriptor path: ``mapInArrow`` + ONE packed
-    ``array<double>`` column (FEATURE_NAMES order) instead of 340 struct
-    fields.
+    """The high-throughput descriptor path: ONE packed ``array<double>``
+    column (FEATURE_NAMES order) instead of 340 struct fields, appended
+    after the input columns.
 
     Why it exists: with the struct form, the Python worker pays per-row
     string materialization on input and 340 separate Arrow column builds on
-    output — measured at ~50% of stage time and the scaling bottleneck.
-    Here captions are decoded from Arrow buffers (zero per-row work) and
-    the output is one FixedSizeList built from a single (n, 340) buffer.
-    Values are identical to the struct path (same kernels; asserted in
-    tests/test_descriptors.py)."""
-    import pyarrow as pa
-
-    keep_fields = [f for f in df.schema.fields
-                   if not (drop_caption and f.name == caption_col)]
-    out_schema = T.StructType(
-        keep_fields + [T.StructField(out_col, T.ArrayType(T.DoubleType(), False), False)]
-    )
-    keep_names = [f.name for f in keep_fields]
-    nfeat = len(FEATURE_NAMES)
-    order = FEATURE_NAMES
-
-    def kernel(batches):
-        for batch in batches:
-            caps = batch.column(batch.schema.get_field_index(caption_col))
-            nrows = len(caps)
-            if nrows == 0:
-                continue
-            codes, row, lens, starts = _flatten_arrow(caps)
-            out = _compute_from_flat(codes, row, lens, starts, nrows)
-            mat = np.empty((nrows, nfeat), dtype=np.float64)
-            for j, name in enumerate(order):
-                mat[:, j] = out[name]
-            feat_arr = pa.FixedSizeListArray.from_arrays(
-                pa.array(mat.ravel(), type=pa.float64()), nfeat
-            ).cast(pa.list_(pa.float64()))
-            cols = [batch.column(batch.schema.get_field_index(n)) for n in keep_names]
-            yield pa.RecordBatch.from_arrays(cols + [feat_arr], keep_names + [out_col])
-
-    return df.mapInArrow(kernel, out_schema)
+    output. Here :func:`features_udf` is a scalar Arrow UDF: only the
+    caption column is sent to Python and only the packed array comes back;
+    every other column stays in the JVM. Values are identical to the struct
+    path (same kernels; asserted in tests/test_descriptors.py)."""
+    keep = [c for c in df.columns if not (drop_caption and c == caption_col)]
+    return df.select(*keep, features_udf()(F.col(caption_col)).alias(out_col))
 
 
 def feature_index(name: str) -> int:

@@ -118,6 +118,8 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("PNG missing IHDR")
     raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, w * 3 + 1)
     ftypes = raw[:, 0]
+    if not ftypes.any():  # every scanline unfiltered: what encode_png writes
+        return raw[:, 1:].reshape(h, w, 3).copy()
     lines = raw[:, 1:].astype(np.uint8)
     out = np.zeros((h, w * 3), dtype=np.uint8)
     bpp = 3
@@ -131,17 +133,18 @@ def decode_png(data: bytes) -> np.ndarray:
             out[y] = cur + prev
         elif f in (1, 3, 4):  # sub / average / paeth need left-to-right scan
             line = np.zeros(w * 3, dtype=np.uint8)
-            for x in range(w * 3):
-                left = line[x - bpp] if x >= bpp else 0
-                up = prev[x]
-                ul = prev[x - bpp] if x >= bpp else 0
-                if f == 1:
-                    line[x] = cur[x] + left
-                elif f == 3:
-                    line[x] = cur[x] + ((int(left) + int(up)) >> 1)
-                else:
-                    pa = _paeth(np.uint8(left), np.uint8(up), np.uint8(ul))
-                    line[x] = cur[x] + pa
+            with np.errstate(over="ignore"):  # filter sums are modulo 256
+                for x in range(w * 3):
+                    left = line[x - bpp] if x >= bpp else 0
+                    up = prev[x]
+                    ul = prev[x - bpp] if x >= bpp else 0
+                    if f == 1:
+                        line[x] = cur[x] + left
+                    elif f == 3:
+                        line[x] = cur[x] + ((int(left) + int(up)) >> 1)
+                    else:
+                        pa = _paeth(np.uint8(left), np.uint8(up), np.uint8(ul))
+                        line[x] = cur[x] + pa
             out[y] = line
         else:
             raise ValueError(f"bad filter {f}")
@@ -187,8 +190,9 @@ def block_mean_resize(lum: np.ndarray, size: int,
     uneven remainders spread deterministically), reduced with
     ``np.add.reduceat`` — works for ANY h, w ≥ 1, including inputs
     smaller than ``size`` (blocks then repeat source rows/cols via the
-    duplicate boundaries, equivalent to nearest-neighbor upsampling)."""
-    h, w = lum.shape
+    duplicate boundaries, equivalent to nearest-neighbor upsampling).
+    Leading axes, if any, index a stack of same-shape inputs."""
+    h, w = lum.shape[-2:]
     size_w = size if size_w is None else size_w
     rb = (np.arange(size, dtype=np.int64) * h) // size
     cb = (np.arange(size_w, dtype=np.int64) * w) // size_w
@@ -196,7 +200,7 @@ def block_mean_resize(lum: np.ndarray, size: int,
     # account for that so each block divides by its true pixel count
     rs = np.maximum(np.diff(np.append(rb, h)), 1)
     cs = np.maximum(np.diff(np.append(cb, w)), 1)
-    s = np.add.reduceat(np.add.reduceat(lum, rb, axis=0), cb, axis=1)
+    s = np.add.reduceat(np.add.reduceat(lum, rb, axis=-2), cb, axis=-1)
     # a duplicated boundary makes reduceat return the single row/col
     # (not a zero sum), so dividing by the clamped size stays correct
     return s / (rs[:, None] * cs[None, :])

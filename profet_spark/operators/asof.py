@@ -23,9 +23,12 @@ implemented at the DataFrame level (no custom Catalyst rule — SURVEY.md
     exchange.
 
 ``broadcast``
-    Small build side: collected once, broadcast to every Python worker,
-    merged against each Arrow batch of the (un-shuffled!) left side.
-    Zero shuffle on the probe side — the strategy of choice when the
+    Small build side: collected once (``toArrow``) and broadcast to every
+    Python worker as a ts-sorted key frame plus its Arrow payload. A
+    scalar Arrow UDF over the left side's key and ts columns runs a
+    narrow ``pd.merge_asof`` per Arrow batch and ``take``s the matched
+    payload rows as one struct; the other left columns never leave the
+    JVM. Zero shuffle on the probe side — the strategy of choice when the
     right side is a dimension-sized update stream.
 
 ``salted``
@@ -257,7 +260,7 @@ def asof_join(
             strategy = "sort_merge"
 
     if strategy == "broadcast":
-        return _asof_broadcast(left, right, entity, ts, pairs, schema, tolerance_s, allow_exact_matches)
+        return _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact_matches)
     if strategy == "salted":
         if hot_keys is None:
             hot_keys = detect_hot_keys(left, entity, skew_frac)
@@ -381,30 +384,48 @@ def _asof_window(left, right, entity, ts, pairs, tolerance_s, allow_exact):
     return out
 
 
-def _asof_broadcast(left, right, entity, ts, pairs, schema, tolerance_s, allow_exact):
+def _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact):
+    """Scalar Arrow UDF over the left side's key and ts columns only: the
+    other left columns stay in the JVM and the matched right payload comes
+    back as one struct. The build side is collected once (``toArrow``) and
+    broadcast as a ts-sorted key frame plus its Arrow payload; per batch a
+    narrow ``merge_asof`` on (keys, ts, row position) picks the payload
+    row, which ``take`` gathers."""
+    if not pairs:
+        return left
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+
     ents = _entity_cols(entity)
-    rsel = ents + [ts] + [src for src, _ in pairs]
-    rpdf = right.select(*rsel).toPandas().sort_values(ts, kind="mergesort").reset_index(drop=True)
-    rpdf = rpdf.rename(columns=dict(pairs))
-    bc = left.sparkSession.sparkContext.broadcast(rpdf)
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-    left_cols = left.columns
     dsts = [dst for _, dst in pairs]
+    rtab = right.select(*ents, ts, *[F.col(src).alias(dst) for src, dst in pairs]).toArrow()
+    rkeys = rtab.select(ents + [ts]).to_pandas()
+    rkeys["__rpos"] = np.arange(len(rkeys))
+    rkeys = rkeys.sort_values(ts, kind="mergesort").reset_index(drop=True)
+    payload = pa.StructArray.from_arrays(
+        [rtab.column(d).combine_chunks() for d in dsts], dsts)
+    bc = left.sparkSession.sparkContext.broadcast((rkeys, payload))
+    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
+    rtypes = {f.name: f.dataType for f in right.schema.fields}
+    pay_type = T.StructType([T.StructField(dst, rtypes[src], True) for src, dst in pairs])
 
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @arrow_udf(pay_type, ArrowUDFType.SCALAR)
+    def asof_payload(*cols):
         _worker.init()
-        rp = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lp = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-            out = pd.merge_asof(
-                lp, rp, on=ts, by=ents, direction="backward",
-                allow_exact_matches=allow_exact, tolerance=tol, suffixes=("", "__rdup"),
-            )
-            yield out[left_cols + dsts]
+        rk, rpay = bc.value
+        lk = pd.DataFrame({c: a.to_pandas() for c, a in zip(ents + [ts], cols)})
+        lk["__lpos"] = np.arange(len(lk))
+        lk = lk.sort_values(ts, kind="mergesort")
+        m = pd.merge_asof(lk, rk, on=ts, by=ents, direction="backward",
+                          allow_exact_matches=allow_exact, tolerance=tol)
+        rpos = np.empty(len(lk))
+        rpos[m["__lpos"].to_numpy()] = m["__rpos"].to_numpy(dtype=np.float64)
+        miss = np.isnan(rpos)  # no right row at or before ts: NULL payload
+        return rpay.take(pa.array(np.where(miss, 0, rpos).astype(np.int64), mask=miss))
 
-    return left.mapInPandas(merge, schema=schema)
+    out = left.select("*", asof_payload(*ents, ts).alias("__asof"))
+    return out.select(*left.columns, *[F.col("__asof")[d].alias(d) for d in dsts])
 
 
 def _hot_predicate(ents: list[str], hot_keys):

@@ -1199,9 +1199,10 @@ def drop_near_duplicate_images(df: DataFrame, id_col: str = "image_id",
     ``phash``, or a prior run's ``phash_dct``/``dhash``) — the dedup
     then never touches ``bytes``. When None, the true DCT pHash is
     computed from pixels through the U3 kernel
-    (functions/image_descriptors.add_image_features — Arrow-batched
-    decode, binary column pruned immediately after), which catches the
-    brightness/contrast-shifted near-dups the stored aHash misses.
+    (functions/image_descriptors.add_image_features — a scalar Arrow UDF
+    over ``bytes`` and ``fmt``, binary column pruned immediately after),
+    which catches the brightness/contrast-shifted near-dups the stored
+    aHash misses.
 
     Composition: D8 :func:`hamming_pairs` (pigeonhole 16-bit-block
     equi-join, full recall ≤ ``max_hamming`` bits, ``max_bucket`` skew
@@ -1444,13 +1445,17 @@ def signature_store_ingest(spark, batch: DataFrame, store_dir: str, *,
         # S8 with key_cols=['id'] runs the moved-key probe — a
         # key-column-pruned scan of the WHOLE store — once per upsert
         # (twice here). A moved key exists iff some batch id was
-        # already ingested, so probe that ONCE against the signature
-        # table we already read (narrow id column, broadcast batch-id
-        # semi join) and downgrade both upserts to the pure
-        # batch-footprint 'skip' mode in the common no-reingest case.
+        # already ingested, so probe that ONCE against both tables we
+        # already read (narrow id column, broadcast batch-id semi join)
+        # and downgrade both upserts to the pure batch-footprint 'skip'
+        # mode in the common no-reingest case. The text table is probed
+        # too: a crash between the two upserts leaves text-only ids,
+        # which the next re-ingest must replace, not duplicate.
         batch_ids = batch.select(F.col(id_col).alias("id")).distinct()
-        reingested = (ssig.join(F.broadcast(batch_ids), "id",
-                                "left_semi").limit(1).count() > 0)
+        stored_ids = ssig.select("id").unionByName(
+            stext.select(F.col(id_col).alias("id")))
+        reingested = (stored_ids.join(F.broadcast(batch_ids), "id",
+                                      "left_semi").limit(1).count() > 0)
         mode = "extend" if reingested else "skip"
         # text FIRST, signatures LAST (see the crash-safety contract)
         P.upsert_partitioned(spark, trows, txt_dir, key_cols=["id"],

@@ -1077,6 +1077,44 @@ def test_signature_store_ingest_reingest_replaces(spark, sf_dir, tmp_path):
     assert list(rows[0]["sig"]) == list(want)
 
 
+def test_signature_store_ingest_replaces_text_left_by_a_crash(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A crash between the text and the signature upsert leaves text rows
+    for ids with no signature row; re-ingesting such an id on a later day
+    replaces its text row instead of adding a second one."""
+    from profet_spark.sources import load_table, partitioned as P
+
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") < 120)
+    store = str(tmp_path / "sigstore")
+    first = docs.where(F.col("doc_id") % 2 == 0)
+    late = docs.where(F.col("doc_id") % 2 == 1).limit(2)
+    dedup.signature_store_ingest(
+        spark, first, store, ingest_ts="2025-01-01 00:00:00",
+        persist=False)
+    upsert = P.upsert_partitioned
+
+    def crash_before_signatures(spark_, rows, target, **kw):
+        if target.endswith("signatures"):
+            raise RuntimeError("crash between the two upserts")
+        return upsert(spark_, rows, target, **kw)
+
+    monkeypatch.setattr(P, "upsert_partitioned", crash_before_signatures)
+    with pytest.raises(RuntimeError, match="crash between"):
+        dedup.signature_store_ingest(
+            spark, late, store, ingest_ts="2025-01-02 00:00:00",
+            persist=False)
+    monkeypatch.setattr(P, "upsert_partitioned", upsert)
+    dedup.signature_store_ingest(
+        spark, late, store, ingest_ts="2025-01-03 00:00:00", persist=False)
+
+    text = P.scan_pruned(spark, store + "/text", ts_col="ingest_ts",
+                         entity_col="id")
+    per_id = text.groupBy("id").count()
+    assert per_id.where(F.col("count") != 1).count() == 0
+    assert per_id.count() == first.count() + late.count()
+
+
 def test_signature_store_ingest_duplicate_batch_ids_raise(spark, sf_dir,
                                                           tmp_path):
     """Round-5 review finding: a batch carrying the same id twice would

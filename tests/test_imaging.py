@@ -4,6 +4,8 @@ payload invariants (BASELINE.json input_hint; SURVEY.md §5.2-3)."""
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
 
 from profet_spark import fixtures, imaging
 
@@ -76,6 +78,93 @@ def test_null_bytes_map_to_decode_failure():
     from profet_spark.functions.image_descriptors import compute_image_stats
     stats = compute_image_stats(None, "png")
     assert stats["decode_ok"] is False
+
+
+def _encode_png_filtered(arr, ftypes):
+    """PNG with the given per-scanline filter types (1 sub, 2 up, 3 average,
+    4 paeth; any other byte is written with the scanline unfiltered),
+    filtered per the PNG spec at 3 bytes per pixel."""
+    import struct
+    import zlib
+
+    h, w, _ = arr.shape
+    img = arr.reshape(h, w * 3).astype(np.int64)
+    rows = []
+    for y in range(h):
+        cur = img[y]
+        up = img[y - 1] if y else np.zeros_like(cur)
+        left = np.concatenate([np.zeros(3, np.int64), cur[:-3]])
+        ul = np.concatenate([np.zeros(3, np.int64), up[:-3]])
+        p = left + up - ul
+        pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
+        f = ftypes[y % len(ftypes)]
+        pred = {1: left, 2: up, 3: (left + up) // 2,
+                4: np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)),
+                }.get(f, 0)
+        rows.append(bytes([f]) + ((cur - pred) % 256).astype(np.uint8).tobytes())
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (imaging._PNG_SIG + imaging._chunk(b"IHDR", ihdr)
+            + imaging._chunk(b"IDAT", zlib.compress(b"".join(rows)))
+            + imaging._chunk(b"IEND", b""))
+
+
+@pytest.mark.parametrize("ftypes", [[1], [2], [3], [4], [0, 1, 2, 3, 4]])
+def test_decode_png_scanline_filters(ftypes):
+    """Scanlines filtered with sub/up/average/paeth (which encode_png never
+    writes) decode to the original pixels, alone and mixed with type 0."""
+    arr = _rand_img(12, w=9, h=7)
+    np.testing.assert_array_equal(
+        imaging.decode_png(_encode_png_filtered(arr, ftypes)), arr)
+
+
+def test_decode_png_rejects_unknown_filter():
+    arr = _rand_img(13, w=4, h=3)
+    with pytest.raises(ValueError, match="bad filter 5"):
+        imaging.decode_png(_encode_png_filtered(arr, [0, 5]))
+
+
+_SHAPES = [(1, 1), (4, 7), (7, 4), (8, 8), (16, 16), (32, 32), (16, 32), (13, 21)]
+
+
+@hst.composite
+def _payload(draw):
+    """One (bytes, fmt) cell: an encoded image of a listed or random shape
+    (random, flat or ramp pixels), corrupt bytes, NULL, or an unknown fmt."""
+    kind = draw(hst.sampled_from(["img"] * 5 + ["corrupt", "null", "fmt"]))
+    if kind == "null":
+        return None, draw(hst.sampled_from(["png", "ppm"]))
+    if kind == "corrupt":
+        return draw(hst.binary(max_size=40)), draw(hst.sampled_from(["png", "ppm"]))
+    h, w = draw(hst.one_of(hst.sampled_from(_SHAPES),
+                           hst.tuples(hst.integers(1, 40), hst.integers(1, 40))))
+    rng = np.random.default_rng(draw(hst.integers(0, 2**16)))
+    pixels = draw(hst.sampled_from(["random", "flat", "ramp"]))
+    if pixels == "random":
+        arr = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+    elif pixels == "flat":
+        arr = np.full((h, w, 3), rng.integers(0, 256), dtype=np.uint8)
+    else:
+        arr = np.broadcast_to((np.arange(w) * 7 % 256).astype(np.uint8)[None, :, None],
+                              (h, w, 3)).copy()
+    fmt = draw(hst.sampled_from(["png", "ppm"]))
+    data = imaging.ENCODERS[fmt](arr)
+    return (data, "jpeg") if kind == "fmt" else (data, fmt)
+
+
+@settings(max_examples=150, deadline=None)
+@given(cells=hst.lists(_payload(), min_size=1, max_size=24))
+def test_image_stats_batch_equals_per_image(cells):
+    """The batched image kernel groups same-shape images into one pass; its
+    values equal the per-image reference exactly, decode failures
+    included."""
+    from profet_spark.functions import image_descriptors as imgd
+
+    datas, fmts = [d for d, _ in cells], [f for _, f in cells]
+    got = imgd.compute_image_stats_batch(datas, fmts)
+    names = [n for n, _ in imgd.IMG_FEATURES]
+    for i, (data, fmt) in enumerate(cells):
+        want = imgd.compute_image_stats(data, fmt)
+        assert {n: got[n][i].item() for n in names} == want, (i, fmt)
 
 
 # ------------------------------------------------------- DCT pHash golden

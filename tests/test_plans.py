@@ -143,3 +143,51 @@ def test_tfidf_scan_prunes_to_id_and_text(spark):
     assert scan and all("n_chars" not in ln and "lang" not in ln
                         and "source" not in ln for ln in scan)
     assert "partial_count" in plan or "partial" in plan.lower()
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _plan_nodes(node):
+    """Pre-order walk of a JVM physical plan, through the AQE wrapper."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    for child in _seq(node.children()):
+        yield from _plan_nodes(child)
+
+
+def test_snapshot_chain_ships_only_kernel_inputs(spark, tmp_path):
+    """The snapshot chain (caption vector -> image stats -> phash lag ->
+    broadcast as-of) runs its three Python kernels as scalar Arrow UDFs:
+    no map-operator node, each UDF evaluated once (the struct outputs are
+    not re-run per extracted field), and no UDF reads the features array
+    or the image bytes except the image kernel reading bytes."""
+    from profet_spark.functions import image_descriptors as imgd
+    from profet_spark.functions import text_descriptors as td
+
+    pdf = fixtures.make_fixture(n_entities=8)
+    snap_path, upd_path = str(tmp_path / "snap"), str(tmp_path / "upd")
+    fixtures.to_spark(spark, pdf).write.parquet(snap_path)
+    (spark.createDataFrame(fixtures.updates_fixture(n_entities=8))
+     .write.parquet(upd_path))
+    df = td.add_caption_features_packed(spark.read.parquet(snap_path))
+    df = imgd.phash_hamming_to_prev(imgd.add_image_features(df))
+    df = asof.asof_join(df, spark.read.parquet(upd_path),
+                        entity="image_id", ts="ts", strategy="auto")
+    plan = df._jdf.queryExecution().executedPlan()
+
+    nodes = list(_plan_nodes(plan))
+    names = [n.nodeName() for n in nodes]
+    assert not [n for n in names if "MapIn" in n], names
+    udfs = [u for n in nodes if n.nodeName() == "ArrowEvalPython"
+            for u in _seq(n.udfs())]
+    assert sorted(u.name() for u in udfs) == [
+        "asof_payload", "image_stats", "profet_features"]
+    reads = {u.name(): {a.name() for a in _seq(u.references().toSeq())}
+             for u in udfs}
+    assert reads == {"profet_features": {"caption"},
+                     "image_stats": {"bytes", "fmt"},
+                     "asof_payload": {"image_id", "ts"}}, reads
+    assert df.count() == len(pdf)

@@ -109,8 +109,9 @@ def test_worker_heap_frozen_and_pyspark_zip_not_reread(spark):
 def _kernels(tree: ast.Module):
     """Nested functions handed to a Python operator: by name, through a
     local assigned from a factory call, or as a factory's return value;
-    plus nested ``pandas_udf``-decorated functions. Module-level functions
-    are pickled by reference, so they load the package anyway."""
+    plus nested ``pandas_udf``- and ``arrow_udf``-decorated functions.
+    Module-level functions are pickled by reference, so they load the
+    package anyway."""
     top = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
     found, unresolved = {}, []
 
@@ -130,7 +131,7 @@ def _kernels(tree: ast.Module):
                     if isinstance(t, ast.Name)}
         for d in local.values():
             for dec in d.decorator_list:
-                if "pandas_udf" in ast.unparse(dec):
+                if any(u in ast.unparse(dec) for u in ("pandas_udf", "arrow_udf")):
                     found[d.lineno] = d
 
         def resolve(arg, line):
