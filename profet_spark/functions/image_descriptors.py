@@ -9,7 +9,9 @@ Arrow batch size bounds memory when multi-KB ``bytes`` values flow
 through (SURVEY.md §4.3) and no other column leaves the JVM. Each image
 decodes on its own; the stats and hashes then run once per group of
 same-shape images (:func:`compute_image_stats_batch`), with
-:func:`compute_image_stats` kept as the per-image reference.
+:func:`compute_image_stats` kept as the per-image reference. Grouping
+pays when a batch holds many images of one shape (a corpus stored at a
+few canonical sizes); with every shape distinct each group is one image.
 
 phash ops (C8) stay JVM-side: nibble extraction and Hamming distance to
 the previous snapshot are pure built-in bit expressions.
@@ -23,15 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from profet_spark.imaging import (
-    average_hash,
-    block_mean_resize,
-    dct_basis,
-    decode,
-    dhash,
-    luminance,
-    phash_dct,
-)
+from profet_spark.imaging import average_hash, decode, dhash, luminance, phash_dct
 
 IMG_FEATURES = [
     ("lum_mean", T.DoubleType()),
@@ -110,18 +104,13 @@ def compute_image_stats(data: bytes, fmt: str) -> dict:
     }
 
 
-def _pack64(bits: np.ndarray) -> np.ndarray:
-    """Row-wise ``_pack_bits_int64``: 64 bits per row, MSB first, into a
-    signed int64."""
-    return np.packbits(bits, axis=1).view(">i8")[:, 0].astype(np.int64)
-
-
 def _stats_same_shape(arr: np.ndarray) -> dict[str, np.ndarray]:
     """Every :data:`IMG_FEATURES` column but ``decode_ok`` for a stack of
     same-shape images ``uint8[n, h, w, 3]``: the arithmetic of
-    :func:`compute_image_stats` and the three hashes with one leading
-    image axis, each reduction over the same contiguous run of values in
-    the same order, so every value is identical to the per-image path."""
+    :func:`compute_image_stats` with one leading image axis, each reduction
+    over the same contiguous run of values in the same order, so every
+    value is identical to the per-image path. The hashes are the
+    :mod:`profet_spark.imaging` ones, which take the stack as is."""
     n, h, w, _ = arr.shape
     lum = luminance(arr)
     flat = lum.reshape(n, h * w)
@@ -144,22 +133,9 @@ def _stats_same_shape(arr: np.ndarray) -> dict[str, np.ndarray]:
     else:
         for name in ("rowprof_max", "rowprof_min", "rowprof_mean"):
             out[name] = np.zeros(n)
-    # aHash (average_hash): 8x8 block means of the top-left multiple-of-8 crop
-    hh, ww = (h // 8) * 8, (w // 8) * 8
-    if hh and ww:
-        blocks = (lum[:, :hh, :ww].reshape(n, 8, hh // 8, 8, ww // 8)
-                  .mean(axis=(2, 4)).reshape(n, 64))
-        out["phash_check"] = _pack64(blocks > blocks.mean(axis=1)[:, None])
-    else:
-        out["phash_check"] = np.zeros(n, dtype=np.int64)
-    # pHash (phash_dct): the 8x8 low band of a 32x32 DCT vs its AC median
-    c = dct_basis(32)
-    d = c @ block_mean_resize(lum, 32) @ c.T
-    low = d[:, :8, :8].reshape(n, 64)
-    out["phash_dct"] = _pack64(low > np.median(low[:, 1:], axis=1)[:, None])
-    # dHash: left < right over an 8x9 block-mean grid
-    g = block_mean_resize(lum, 8, 9)
-    out["dhash"] = _pack64((g[:, :, :-1] < g[:, :, 1:]).reshape(n, 64))
+    out["phash_check"] = average_hash(arr)
+    out["phash_dct"] = phash_dct(arr)
+    out["dhash"] = dhash(arr)
     return out
 
 

@@ -12,7 +12,10 @@ numpy/stdlib:
   ``phash`` column (BASELINE.json input_hint).
 - PSNR gate for any future lossy format (BASELINE.json: PSNR ≥ 40 dB).
 
-All functions operate on ``np.ndarray[h, w, 3] uint8``.
+All functions operate on ``np.ndarray[h, w, 3] uint8``. ``luminance``,
+``block_mean_resize`` and the three hashes also take a stack
+``[..., h, w, 3]`` of same-shape images, the hashes then returning one
+int64 per image.
 """
 
 from __future__ import annotations
@@ -223,17 +226,23 @@ def dct_basis(n: int) -> np.ndarray:
     return _DCT_BASIS_CACHE[n]
 
 
-def _pack_bits_int64(bits: np.ndarray) -> int:
-    """Pack ≤64 bits row-major MSB-first into a signed int64 (the
-    parquet/phash-column wrap shared by aHash and pHash)."""
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
+def _pack_bits_int64(bits: np.ndarray) -> np.ndarray:
+    """Pack the last axis (≤64 bits, MSB first) into a signed int64 (the
+    parquet/phash-column wrap shared by the three hashes); leading axes,
+    if any, index a stack of hashes."""
+    bits = np.asarray(bits, dtype=bool)
+    pad = np.zeros(bits.shape[:-1] + (64 - bits.shape[-1],), dtype=bool)
+    packed = np.packbits(np.concatenate([pad, bits], axis=-1), axis=-1)
+    return packed.view(">i8")[..., 0].astype(np.int64)
+
+
+def _unstack(v: np.ndarray) -> int | np.ndarray:
+    """A hash of one image is a Python int; a stack keeps its array."""
+    return int(v) if v.ndim == 0 else v
 
 
 def phash_dct(arr: np.ndarray, hash_size: int = 8,
-              highfreq_factor: int = 4) -> int:
+              highfreq_factor: int = 4) -> int | np.ndarray:
     """Classic DCT perceptual hash (pHash) → signed int64.
 
     Luma → ``(hash_size·highfreq_factor)²`` block-mean resize (32×32
@@ -254,12 +263,12 @@ def phash_dct(arr: np.ndarray, hash_size: int = 8,
     lum = block_mean_resize(luminance(arr), img_size)
     c = dct_basis(img_size)
     d = c @ lum @ c.T
-    low = d[:hash_size, :hash_size].flatten()
-    med = float(np.median(low[1:]))
-    return _pack_bits_int64(low > med)
+    low = d[..., :hash_size, :hash_size].reshape(*d.shape[:-2], hash_size ** 2)
+    med = np.median(low[..., 1:], axis=-1, keepdims=True)
+    return _unstack(_pack_bits_int64(low > med))
 
 
-def dhash(arr: np.ndarray, hash_size: int = 8) -> int:
+def dhash(arr: np.ndarray, hash_size: int = 8) -> int | np.ndarray:
     """Row-gradient difference hash (dHash) → signed int64: luma
     block-mean resized to ``hash_size × (hash_size+1)``, bit =
     ``left < right`` for each horizontally adjacent pair, packed
@@ -272,16 +281,18 @@ def dhash(arr: np.ndarray, hash_size: int = 8) -> int:
         raise ValueError(
             f"dhash: hash_size must be in 1..8, got {hash_size}")
     g = block_mean_resize(luminance(arr), hash_size, hash_size + 1)
-    return _pack_bits_int64((g[:, :-1] < g[:, 1:]).flatten())
+    bits = (g[..., :-1] < g[..., 1:]).reshape(*g.shape[:-2], hash_size ** 2)
+    return _unstack(_pack_bits_int64(bits))
 
 
-def average_hash(arr: np.ndarray) -> int:
+def average_hash(arr: np.ndarray) -> int | np.ndarray:
     """8x8 block-mean aHash over luma → signed int64 (parquet-friendly)."""
     lum = luminance(arr)
-    h, w = lum.shape
+    lead, (h, w) = lum.shape[:-2], lum.shape[-2:]
     # block-mean "resize" to 8x8: pad to multiples of 8 by edge-truncation
     hh, ww = (h // 8) * 8, (w // 8) * 8
     if hh == 0 or ww == 0:
-        return 0
-    blocks = lum[:hh, :ww].reshape(8, hh // 8, 8, ww // 8).mean(axis=(1, 3))
-    return _pack_bits_int64((blocks > blocks.mean()).flatten())
+        return _unstack(np.zeros(lead, dtype=np.int64))
+    blocks = (lum[..., :hh, :ww].reshape(*lead, 8, hh // 8, 8, ww // 8)
+              .mean(axis=(-3, -1)).reshape(*lead, 64))
+    return _unstack(_pack_bits_int64(blocks > blocks.mean(axis=-1, keepdims=True)))

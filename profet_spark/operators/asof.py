@@ -384,6 +384,15 @@ def _asof_window(left, right, entity, ts, pairs, tolerance_s, allow_exact):
     return out
 
 
+def _naive_utc(s: pd.Series) -> pd.Series:
+    """A TimestampType column arrives tz-aware, in the session time zone
+    inside a UDF but in UTC from ``toArrow``; merge keys must share one
+    dtype, so both sides become naive UTC. Other types pass through."""
+    if isinstance(s.dtype, pd.DatetimeTZDtype):
+        return s.dt.tz_convert("UTC").dt.tz_localize(None)
+    return s
+
+
 def _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact):
     """Scalar Arrow UDF over the left side's key and ts columns only: the
     other left columns stay in the JVM and the matched right payload comes
@@ -401,6 +410,7 @@ def _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact):
     dsts = [dst for _, dst in pairs]
     rtab = right.select(*ents, ts, *[F.col(src).alias(dst) for src, dst in pairs]).toArrow()
     rkeys = rtab.select(ents + [ts]).to_pandas()
+    rkeys[ts] = _naive_utc(rkeys[ts])
     rkeys["__rpos"] = np.arange(len(rkeys))
     rkeys = rkeys.sort_values(ts, kind="mergesort").reset_index(drop=True)
     payload = pa.StructArray.from_arrays(
@@ -415,6 +425,7 @@ def _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact):
         _worker.init()
         rk, rpay = bc.value
         lk = pd.DataFrame({c: a.to_pandas() for c, a in zip(ents + [ts], cols)})
+        lk[ts] = _naive_utc(lk[ts])
         lk["__lpos"] = np.arange(len(lk))
         lk = lk.sort_values(ts, kind="mergesort")
         m = pd.merge_asof(lk, rk, on=ts, by=ents, direction="backward",

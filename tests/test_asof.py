@@ -98,6 +98,24 @@ def test_detect_hot_keys(spark, fixture_dfs):
     assert hot == ["e0000"]
 
 
+@pytest.mark.parametrize("allow_exact,tol", [(True, None), (False, 3600.0)])
+def test_broadcast_matches_window_in_a_non_utc_session(spark, fixture_dfs, allow_exact, tol):
+    """A TimestampType ts reaches the broadcast UDF in the session time
+    zone, while the collected build side is UTC; the merge must not care,
+    and a timestamp payload must come back as the same instant."""
+    ldf, rdf = fixture_dfs[0], fixture_dfs[1].withColumn("rts", F.col("ts"))
+    assert dict(ldf.dtypes)["ts"] == "timestamp"
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        kw = dict(tolerance_s=tol, allow_exact_matches=allow_exact)
+        a = asof_join(ldf, rdf, strategy="window", **kw).toPandas()
+        b = asof_join(ldf, rdf, strategy="broadcast", **kw).toPandas()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    pd.testing.assert_frame_equal(_norm(a), _norm(b))
+
+
 def test_asof_salted_equals_unsalted(spark, fixture_dfs):
     ldf, rdf, lp, rp = fixture_dfs
     a = _norm(asof_join(ldf, rdf, strategy="sort_merge").toPandas())

@@ -304,6 +304,31 @@ def test_dhash_reference_and_invariance():
         imaging.dhash(arr, hash_size=9)
 
 
+def test_pack_bits_int64_matches_serial_reference():
+    rng = np.random.default_rng(52)
+    for k in (1, 4, 9, 36, 63, 64):
+        bits = rng.integers(0, 2, size=(5, k)).astype(bool)
+        want = []
+        for row in bits:
+            v = 0
+            for bit in row:
+                v = (v << 1) | int(bit)
+            want.append(v - (1 << 64) if v >= (1 << 63) else v)
+        assert imaging._pack_bits_int64(bits).tolist() == want
+        assert int(imaging._pack_bits_int64(bits[0])) == want[0]
+
+
+@pytest.mark.parametrize("h,w", [(1, 1), (4, 7), (8, 8), (13, 21), (32, 32)])
+def test_hashes_of_a_stack_equal_per_image(h, w):
+    rng = np.random.default_rng(53)
+    stack = rng.integers(0, 256, size=(3, h, w, 3), dtype=np.uint8)
+    for fn in (imaging.average_hash, lambda a: imaging.phash_dct(a, 6),
+               imaging.phash_dct, lambda a: imaging.dhash(a, 5), imaging.dhash):
+        one = [fn(a) for a in stack]
+        assert all(type(v) is int for v in one)
+        assert fn(stack).tolist() == one
+
+
 def test_block_mean_resize_rectangular():
     rng = np.random.default_rng(51)
     a = rng.integers(0, 256, size=(64, 72)).astype(np.float64)
