@@ -89,11 +89,6 @@ def h32_hi_sql_duckdb(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 9, 8)) AS BIGINT)"
 
 
-def minhash_perm_sql(h_expr: str, a: int, b: int, p: int = MINHASH_P) -> str:
-    """Engine-neutral SQL text for one MinHash permutation of a hash value."""
-    return f"(({a} * (({h_expr}) % {p}) + {b}) % {p})"
-
-
 def words(text: Column | str, lower: bool = True) -> Column:
     """Whitespace tokenization; empty tokens removed (JVM-side)."""
     c = F.col(text) if isinstance(text, str) else text
@@ -160,30 +155,6 @@ def band_hashes(signature: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS)
         ]))
         for b in range(bands)
     ])
-
-
-def simhash32(hashes: Column) -> Column:
-    """32-bit SimHash over an array of (already hashed) features: bit j of
-    the result is 1 iff sum over features of (+1 if bit j of h32 set else -1)
-    is positive. Pure integer arithmetic — engine-portable, shuffle-free.
-
-    Per-row HOF reference form only (interpreted lambdas, ~40x slower than
-    codegen); the engine's production path is the 64-bit explode+aggregate
-    in operators/dedup.simhash_table (wider block-join key space)."""
-    def bit(j: int) -> Column:
-        vote = F.aggregate(
-            hashes,
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + F.when(
-                F.shiftright(x, j).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-        return F.when(vote > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-
-    out = F.lit(0).cast("bigint")
-    for j in range(32):
-        out = out + bit(j)
-    return out
 
 
 def quantize_vec(vec: Column | str, scale: float = 1e6) -> Column:

@@ -33,6 +33,22 @@ module does not build and ``spark-submit --py-files`` jobs, where the
 package is not importable when the daemon starts. Kernels whose closures
 would pull in only pandas call it explicitly.
 
+Generated-code cache. Spark compiles each whole-stage-codegen stage and
+each generated projection to a class with Janino and keeps the classes in
+a cache keyed by source text (``spark.sql.codegen.cache.maxEntries``,
+LRU, 100 by default). One ``event_pit_matrix`` job of ``perfbench`` (as-of,
+ffill, sessions, a 3-table PIT matrix, rolling and decayed stats) needs
+113 classes and one ``corpus_curation`` job 118, so at 100 each job
+evicted what the next one needed: 84-89 Janino compiles per repeated job,
+whose classes the JIT then compiled again from scratch.
+``snapshot_features`` needs 32 and was never affected. This module sets
+the cache to 1000 entries, so a repeated job compiles nothing; plans,
+rows and results are the same at any cache size. The size is read once
+per JVM, when it first generates code, so a session this module did not
+build keeps Spark's 100 unless it sets the conf itself: the driver's own
+session handed to ``__spark_entry__.entry``, and ``BENCH/scaling_job.py``'s
+session, are such sessions.
+
 Spark's "time to initialize Python workers" (``python.init_s`` in
 ``perfbench``) is not a cost to chase: ``worker.py`` stamps its boot time
 before its blocking read of the next task, so for a reused worker the
@@ -83,6 +99,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.ui.enabled", "false")
+        # a job's generated-class working set (up to ~120) must fit, or
+        # every job recompiles what the previous one evicted (see above)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("PROFET_DRIVER_MEM", "8g"))
         # 1 task = 1 core: a threaded BLAS inside a Python worker only
         # steals cycles from the other workers on the host. Measured 3x

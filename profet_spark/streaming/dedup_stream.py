@@ -67,14 +67,16 @@ def _marker_path(store_dir: str, ns: str, batch_id: int) -> str:
     return os.path.join(store_dir, "_batches", ns, f"{batch_id}.json")
 
 
-def committed_batches(store_dir: str,
-                      checkpoint_dir: str | None = None) -> dict[int, dict]:
+def committed_batches(
+        store_dir: str, checkpoint_dir: str | None = None,
+) -> dict[int, dict] | dict[tuple[str, int], dict]:
     """Lineage/metrics records of committed ingest batches. With
-    ``checkpoint_dir``, only that stream's namespace; otherwise every
-    namespace flattened (batch ids may repeat across streams — the
-    records carry their ``checkpoint_ns``)."""
+    ``checkpoint_dir``, that stream's records keyed by ``batch_id``.
+    Without it, every stream's records keyed by ``(checkpoint_ns,
+    batch_id)``: batch ids restart at 0 in each stream, so the id alone
+    would let one stream's record overwrite another's."""
     base = os.path.join(store_dir, "_batches")
-    out: dict[int, dict] = {}
+    out: dict = {}
     if not os.path.isdir(base):
         return out
     spaces = ([_ck_namespace(checkpoint_dir)] if checkpoint_dir
@@ -87,7 +89,8 @@ def committed_batches(store_dir: str,
             if f.endswith(".json"):
                 with open(os.path.join(d, f)) as fh:
                     rec = json.load(fh)
-                out[int(rec["batch_id"])] = rec
+                bid = int(rec["batch_id"])
+                out[bid if checkpoint_dir else (ns, bid)] = rec
     return out
 
 

@@ -7,7 +7,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="profet_spark_tests", master="local[4]", shuffle_partitions=8)
+    # pyproject's filterwarnings reaches only this driver process; the
+    # env var makes a FutureWarning an error in the Python workers too.
+    # The later entry wins: pyspark's applyInPandasWithState serializer
+    # pads its output with all-NA rows and pd.concat warns about that
+    # padding, which no caller can avoid.
+    s = get_spark(app="profet_spark_tests", master="local[4]",
+                  shuffle_partitions=8,
+                  extra={"spark.executorEnv.PYTHONWARNINGS":
+                         "error::FutureWarning,"
+                         "ignore::FutureWarning:pyspark.sql.pandas.serializers"})
     yield s
     s.stop()
 

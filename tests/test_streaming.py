@@ -886,7 +886,7 @@ def test_ingest_stream_equals_batch_two_day_replay(spark, sf_dir,
     assert len(ssig) == len(bsig)
     assert all(list(a) == list(b) for a, b in zip(ssig.sig, bsig.sig))
     # lineage + metrics markers (north rule: resumable with metrics)
-    rec = committed_batches(store)
+    rec = committed_batches(store, ck)
     assert set(rec) == {0, 1}
     assert rec[0]["rows"] == day1.count()
     assert rec[1]["n_pairs"] == len(b2)
@@ -985,6 +985,31 @@ def test_ingest_stream_new_checkpoint_new_data_not_skipped(
     assert set(committed_batches(store, ck2)) == {0}
     assert committed_batches(store, ck1)[0]["rows"] == first.count()
     assert committed_batches(store, ck2)[0]["rows"] == second.count()
+
+
+def test_committed_batches_flattened_keeps_every_stream(tmp_path):
+    """Two streams over one store both commit batch 0. The flattened
+    view (no checkpoint) keys by (checkpoint_ns, batch_id), so it holds
+    both records; each per-checkpoint view holds its own batch 0."""
+    import json
+    import os
+
+    from profet_spark.streaming import committed_batches
+    from profet_spark.streaming.dedup_stream import _ck_namespace, _marker_path
+
+    store = str(tmp_path / "store")
+    cks = [str(tmp_path / "ck1"), str(tmp_path / "ck2")]
+    for rows, ck in zip((60, 70), cks):
+        marker = _marker_path(store, _ck_namespace(ck), 0)
+        os.makedirs(os.path.dirname(marker))
+        with open(marker, "w") as fh:
+            json.dump({"batch_id": 0, "checkpoint_ns": _ck_namespace(ck),
+                       "rows": rows}, fh)
+    flat = committed_batches(store)
+    assert set(flat) == {(_ck_namespace(ck), 0) for ck in cks}
+    assert sorted(r["rows"] for r in flat.values()) == [60, 70]
+    assert committed_batches(store, cks[0])[0]["rows"] == 60
+    assert committed_batches(store, cks[1])[0]["rows"] == 70
 
 
 def test_ingest_stream_marker_checksum_verifies(spark, sf_dir,
