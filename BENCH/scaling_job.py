@@ -139,7 +139,7 @@ def main() -> None:
             F.crc32(F.concat("image_id", F.col("ts").cast("string"))) % 5 == 0
         ).groupBy("image_id", "ts").agg(F.max(F.length("caption")).alias("anchor_len"))
         narrow = asof.asof_join(narrow, sampled, entity="image_id", ts="ts",
-                                strategy="sort_merge")
+                                strategy="window")
         narrow.write.format("noop").mode("overwrite").save()
         # image branch: decode + pixel stats + phash hamming window
         img = imgd.add_image_features(snap_img)

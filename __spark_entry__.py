@@ -68,7 +68,7 @@ def entry(spark: SparkSession) -> DataFrame:
         .agg(F.max("value").alias("purch_val"))
     )
     feat = asof.asof_join(
-        ev, purchases, entity="user_id", ts="ts", strategy="sort_merge"
+        ev, purchases, entity="user_id", ts="ts", strategy="window"
     )
     feat = temporal.ffill(feat, ["purch_val"], entity="user_id", ts="ts", tiebreak=["event_id"])
     feat = temporal.sessionize(feat, gap_seconds=3600, entity="user_id", ts="ts", tiebreak=["event_id"])
@@ -154,7 +154,7 @@ def _q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("purch_val"))
     )
-    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts", strategy="sort_merge")
+    out = asof.asof_join(ev, purchases, entity="user_id", ts="ts")
     return out.select("user_id", "ts", "event_id", "value", "purch_val")
 
 
@@ -2168,11 +2168,12 @@ def _q_asof_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3c salted-asof skew strategy (hot keys split across salt buckets,
-    build side replicated) — same oracle as j3_asof_join."""
+    """J3c salted window as-of (hot keys split across salt buckets, their
+    build rows replicated) — same oracle as j3_asof_join."""
     ev, purchases = _asof_inputs(spark, sf_dir)
     out = asof.asof_join(ev, purchases, entity="user_id", ts="ts",
-                         strategy="salted", skew_frac=0.01)
+                         strategy="window",
+                         hot_keys=asof.detect_hot_keys(ev, "user_id", 0.01))
     return out.select("user_id", "ts", "event_id", "value", "purch_val")
 
 
@@ -2248,7 +2249,7 @@ def _q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (merge_asof tolerance semantics, inclusive)."""
     ev, purchases = _asof_inputs(spark, sf_dir)
     out = asof.asof_join(ev, purchases, entity="user_id", ts="ts",
-                         strategy="sort_merge", tolerance_s=7200.0)
+                         strategy="window", tolerance_s=7200.0)
     return out.select("user_id", "ts", "event_id", "value", "purch_val")
 
 
@@ -3777,7 +3778,7 @@ def _q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/quality.py:skew_profile): the 20 heaviest user_id keys of
     the events table with exact basis-point share and the recommended
     per-key salt fan-out at 32 shuffle partitions — the measured input
-    to the salted as-of strategy (operators/asof.py). One partial-agg
+    to the salted as-of window plan (operators/asof.py). One partial-agg
     key shuffle + broadcast totals + TakeOrderedAndProject (plan pinned
     in tests/test_quality.py). NULL keys are filtered on BOTH sides:
     Spark sorts NULLS FIRST ascending, DuckDB NULLS LAST, so a null key

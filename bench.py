@@ -50,9 +50,7 @@ def _materialize(df) -> int:
 def pit_features_events(spark, sf_dir, n_parts):
     """Flagship: PIT feature pipeline over the events stream (as-of join +
     ffill + sessionize + expanding stats). Uses the pure-JVM window as-of
-    strategy (bit-identical to the sort_merge pandas kernel, tested; 1.4x
-    faster on this pipeline); input repartitioned off the single-split
-    testdata file."""
+    plan; input repartitioned off the single-split testdata file."""
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "user_id", "ts", "event_type", "value")
           .repartition(n_parts))

@@ -7,61 +7,48 @@ NEVER be attached — the zero-leakage invariant of BASELINE.json's
 north_rule. ProFET has no join at all (SURVEY.md §2.3); this operator is
 new, mandated by the north rule.
 
-Spark has no native ASOF join, so four physical strategies are
-implemented at the DataFrame level (no custom Catalyst rule — SURVEY.md
-§4.2):
+Spark has no native ASOF join, so two physical plans are implemented at
+the DataFrame level (no custom Catalyst rule — SURVEY.md §4.2), one per
+build-side regime:
 
-``sort_merge`` (default, scales to 100 TB)
-    Tag both sides, ``unionByName`` them, hash-``repartition`` on the
-    entity key (ONE shuffle for both inputs), ``sortWithinPartitions(ts,
-    side)`` so right rows precede left rows at equal ts, then a single
-    ``mapInPandas`` pass per partition runs a vectorized
-    ``pd.merge_asof(by=entity)`` over the whole co-partitioned,
-    pre-sorted partition. No per-group Python dispatch (unlike
-    ``groupBy().applyInPandas``, which pays per-entity overhead when
-    entities are numerous and small), and AQE can still coalesce the
-    exchange.
-
-``broadcast``
-    Small build side: collected once (``toArrow``) and broadcast to every
-    Python worker as a ts-sorted key frame plus its Arrow payload. A
-    scalar Arrow UDF over the left side's key and ts columns runs a
-    narrow ``pd.merge_asof`` per Arrow batch and ``take``s the matched
-    payload rows as one struct; the other left columns never leave the
-    JVM. Zero shuffle on the probe side — the strategy of choice when the
-    right side is a dimension-sized update stream.
-
-``salted``
-    Skewed entity clusters (the fixture's hot phash cluster holds ~30% of
-    rows): hot left rows get a deterministic salt in [0, s), hot right
-    rows are REPLICATED once per salt, and the sort-merge path runs on
-    ``(entity, salt)``. AQE's skew-join splitting cannot see inside
-    ``mapInPandas``, so the salting is explicit (SURVEY.md §4.2).
-    Results are bit-identical to the unsalted path (tests/test_asof.py).
-
-``window``
+``window`` (large build sides)
     Pure JVM: union the tagged sides, then ONE partitioned window
     ``last(payload struct, ignorenulls=True)`` carries the latest right
     payload onto every left row (right rows order before left at equal ts
     for ``<=``, after for strict ``<``; tolerance post-filters on the
-    carried right-ts). Exchange + Sort + WindowExec, no Python boundary —
-    fastest path when the payload fits a struct; bit-identical to
-    sort_merge (tests/test_asof.py matrix).
+    carried right-ts). Exchange + Sort + WindowExec, no Python boundary.
+
+    Salting: WindowExec buffers one partition group at a time (spilling
+    when it is large), so a hot entity's whole history sits in one task.
+    Given ``hot_keys``, hot left rows get a deterministic salt in [0, s),
+    hot right rows are REPLICATED once per salt, and the window partitions
+    on ``(entity, salt)``: each hot group splits into ``s`` groups, each
+    still seeing the entity's full right history. The salt column is
+    dropped from the output; the rows equal the unsalted plan's.
+
+``broadcast`` (small build sides)
+    The build side is collected once (``toArrow``) and broadcast to every
+    Python worker as a ts-sorted key frame plus its Arrow payload. A
+    scalar Arrow UDF over the left side's key and ts columns runs a
+    narrow ``pd.merge_asof`` per Arrow batch and ``take``s the matched
+    payload rows as one struct; the other left columns never leave the
+    JVM. Zero shuffle on the probe side.
 
 ``auto`` picks broadcast when the build side is provably small (its
 parquet footer row count when it is a bare file scan, else one bounded
-``limit().count()`` probe), salted when the caller supplies
-``hot_keys`` (from :func:`detect_hot_keys` — one aggregate scan, run it
-explicitly — or an offline skew profile; auto never scans for skew
-implicitly), else sort-merge.
+``limit().count()`` probe), else window. Salting is never automatic: the
+caller passes ``hot_keys`` (from :func:`detect_hot_keys` — one aggregate
+scan, run it explicitly — or an offline skew profile).
+
+:func:`label_join`, the forward as-of, runs the same window plan with
+the frame reversed.
 
 Contract: a NULL ``ts`` on either side raises with a clear message in
-every strategy (point-in-time semantics are undefined for it).
+every plan (point-in-time semantics are undefined for it).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -79,9 +66,23 @@ _SALT = "__asof_salt"
 
 def _entity_cols(entity) -> list[str]:
     """Normalize the entity key: a single column name or a composite list
-    (e.g. ``["user_id", "device"]``) — every strategy partitions/merges on
-    the full tuple."""
+    (e.g. ``["user_id", "device"]``) — both plans partition/merge on the
+    full tuple."""
     return [entity] if isinstance(entity, str) else list(entity)
+
+
+def _ts_checked(df: DataFrame, ts: str, op: str) -> DataFrame:
+    """Raise, naming ``op``, on a NULL ``ts``: point-in-time semantics are
+    undefined for it, and the plans would otherwise disagree
+    (merge_asof raises an opaque ValueError deep in an executor while a
+    window carry silently smears values across the null) — one loud
+    uniform contract instead."""
+    return df.withColumn(ts, F.when(
+        F.col(ts).isNull(),
+        F.raise_error(F.lit(
+            f"{op}: NULL {ts} — point-in-time rows must carry a "
+            "timestamp")).cast(df.schema[ts].dataType),
+    ).otherwise(F.col(ts)))
 
 
 def _right_value_cols(left: DataFrame, right: DataFrame, entity, ts: str, suffix: str) -> list[tuple[str, str]]:
@@ -107,95 +108,6 @@ def _right_value_cols(left: DataFrame, right: DataFrame, entity, ts: str, suffix
     return out
 
 
-def _out_schema(left: DataFrame, right: DataFrame, pairs: list[tuple[str, str]]) -> T.StructType:
-    fields = list(left.schema.fields)
-    rmap = {f.name: f for f in right.schema.fields}
-    for src, dst in pairs:
-        fields.append(T.StructField(dst, rmap[src].dataType, True))
-    return T.StructType(fields)
-
-
-def _merge_kernel(
-    left_cols: list[str],
-    pairs: list[tuple[str, str]],
-    entity: str,
-    ts: str,
-    tolerance_s: float | None,
-    allow_exact: bool,
-    by_cols: list[str],
-):
-    """Build the per-partition pandas merge function. The partition
-    arrives co-partitioned on the entity key and sorted by (ts, side) —
-    merge_asof's preconditions.
-
-    STREAMING merge: batches are processed as they arrive; the only state
-    carried across batches is, per by-group, the latest right row for each
-    of the last TWO distinct ts values (never the whole partition). Two,
-    not one: with allow_exact_matches=False a left row at ts T must reject
-    an equal-ts right and fall back to the latest right with ts < T, which
-    can sit one distinct-ts step earlier when an Arrow batch boundary
-    splits an equal-ts run. Null by-keys are kept in the carry
-    (dropna=False) — merge_asof matches them like any other group.
-    Correctness leans on the global (ts, side) sort: every carry row's ts
-    is <= every ts in later batches, so prepending the (ts-sorted) carry
-    to a batch's right rows preserves merge_asof's sorted-on-key
-    precondition, and right-before-left at equal ts means a left row's
-    admissible rights can never land in a LATER batch. Memory is
-    O(arrow_batch + distinct_entities_in_partition) instead of the whole
-    partition — the 100 TB-safe shape."""
-    rsrc = [src for src, _ in pairs]
-    rename = dict(pairs)
-    dsts = [dst for _, dst in pairs]
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-    lkeep = left_cols + [c for c in by_cols if c not in left_cols]
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _worker.init()
-        carry: pd.DataFrame | None = None  # latest right row per by-group
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lmask = pdf[_SIDE] == 1
-            lpdf = pdf.loc[lmask, lkeep].reset_index(drop=True)
-            rpdf = (pdf.loc[~lmask, by_cols + [ts] + rsrc]
-                    .reset_index(drop=True).rename(columns=rename))
-            if carry is None or carry.empty:
-                rall = rpdf
-            elif rpdf.empty:
-                rall = carry
-            else:
-                rall = pd.concat([carry, rpdf], ignore_index=True)
-            if not lpdf.empty:
-                if rall.empty:
-                    out = lpdf.copy()
-                    for dst in dsts:
-                        out[dst] = None
-                else:
-                    out = pd.merge_asof(
-                        lpdf,
-                        rall,
-                        on=ts,
-                        by=by_cols,
-                        direction="backward",
-                        allow_exact_matches=allow_exact,
-                        tolerance=tol,
-                        suffixes=("", "__rdup"),
-                    )
-                yield out[left_cols + dsts]
-            if not rall.empty:
-                # rall is ts-sorted (carry ts <= batch ts; both sorted):
-                # keep, per group, the latest row of each of the last two
-                # DISTINCT ts values (strict-bound fallback), nulls kept
-                last_per_ts = (rall.groupby(by_cols + [ts], sort=False,
-                                            as_index=False, dropna=False)
-                               .tail(1))
-                carry = (last_per_ts.groupby(by_cols, sort=False,
-                                             as_index=False, dropna=False)
-                         .tail(2).reset_index(drop=True))
-
-    return merge
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -205,46 +117,23 @@ def asof_join(
     tolerance_s: float | None = None,
     allow_exact_matches: bool = True,
     suffix: str = "_r",
-    num_partitions: int | None = None,
     salt: int = 8,
     hot_keys: list[Any] | None = None,
     broadcast_threshold: int = 200_000,
-    skew_frac: float = 0.05,
 ) -> DataFrame:
     """Attach, to every left row, the latest right row at-or-before its ts.
 
-    ``entity`` is one column name or a composite-key list (every strategy
-    partitions and merges on the full tuple; for composite keys,
+    ``entity`` is one column name or a composite-key list (both plans
+    partition and merge on the full tuple; for composite keys,
     ``hot_keys`` entries are value tuples in the same column order).
     Returns left's columns plus right's value columns (collisions suffixed).
     ``allow_exact_matches=False`` makes the bound strict (< instead of <=).
-
-    Cost note: ``strategy="salted"`` with ``hot_keys=None`` runs
-    :func:`detect_hot_keys` — one full scan of ``left`` (a per-entity hash
-    aggregate). At warehouse scale pass ``hot_keys`` explicitly (from table
-    statistics or an offline skew profile) so the salted plan adds no scan.
+    ``strategy`` is ``"auto"``, ``"window"`` or ``"broadcast"``;
+    ``hot_keys`` salts the window plan ``salt`` ways on those entities.
     """
-    spark = left.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    # point-in-time semantics are undefined for a NULL ts, and the
-    # strategies would otherwise disagree: merge_asof raises an opaque
-    # ValueError deep in an executor while the window path silently
-    # carries values across the null — one loud uniform contract instead
-    def _ts_checked(df: DataFrame) -> DataFrame:
-        return df.withColumn(ts, F.when(
-            F.col(ts).isNull(),
-            F.raise_error(F.lit(
-                f"asof_join: NULL {ts} — point-in-time rows must carry a "
-                "timestamp")).cast(df.schema[ts].dataType),
-        ).otherwise(F.col(ts)))
-
-    left, right = _ts_checked(left), _ts_checked(right)
-
+    left = _ts_checked(left, ts, "asof_join")
+    right = _ts_checked(right, ts, "asof_join")
     pairs = _right_value_cols(left, right, entity, ts, suffix)
-    schema = _out_schema(left, right, pairs)
-    left_cols = left.columns
 
     if strategy == "auto":
         # build-side cardinality from parquet footers (no Spark job); the
@@ -252,29 +141,29 @@ def asof_join(
         n_right = estimate_row_count(right)
         if n_right is None:
             n_right = right.limit(broadcast_threshold + 1).count()
-        if n_right <= broadcast_threshold:
-            strategy = "broadcast"
-        elif hot_keys:
-            strategy = "salted"
-        else:
-            strategy = "sort_merge"
+        strategy = "broadcast" if n_right <= broadcast_threshold else "window"
 
     if strategy == "broadcast":
         return _asof_broadcast(left, right, entity, ts, pairs, tolerance_s, allow_exact_matches)
-    if strategy == "salted":
-        if hot_keys is None:
-            hot_keys = detect_hot_keys(left, entity, skew_frac)
-        return _asof_salted(
-            left, right, entity, ts, pairs, schema, tolerance_s, allow_exact_matches,
-            num_partitions, salt, hot_keys,
-        )
-    if strategy == "sort_merge":
-        return _asof_sort_merge(
-            left, right, entity, ts, pairs, schema, tolerance_s, allow_exact_matches, num_partitions
-        )
-    if strategy == "window":
-        return _asof_window(left, right, entity, ts, pairs, tolerance_s, allow_exact_matches)
-    raise ValueError(f"unknown asof strategy: {strategy}")
+    if strategy != "window":
+        raise ValueError(f"unknown asof strategy: {strategy}")
+    ents = _entity_cols(entity)
+    if not hot_keys:
+        return _asof_window(left, right, ents, ts, pairs, tolerance_s, allow_exact_matches)
+    is_hot = _hot_predicate(ents, hot_keys)
+    # left: hot rows spread deterministically across salts (hash of ts —
+    # any stable per-row value works; correctness needs only that the
+    # matching right rows exist under every salt)
+    left = left.withColumn(_SALT, F.when(
+        is_hot, F.pmod(F.xxhash64(F.col(ts)), F.lit(salt)).cast("int")
+    ).otherwise(F.lit(0)))
+    # right: hot rows replicated once per salt so every left shard sees
+    # the full as-of history of its entity
+    right = right.withColumn(_SALT, F.explode(F.when(
+        is_hot, F.sequence(F.lit(0), F.lit(salt - 1))
+    ).otherwise(F.array(F.lit(0)))))
+    out = _asof_window(left, right, ents + [_SALT], ts, pairs, tolerance_s, allow_exact_matches)
+    return out.drop(_SALT)
 
 
 def detect_hot_keys(df: DataFrame, entity: str | list[str], frac: float = 0.05,
@@ -310,78 +199,58 @@ def detect_hot_keys(df: DataFrame, entity: str | list[str], frac: float = 0.05,
         counts.unpersist()
 
 
-def _prep_union(left: DataFrame, right: DataFrame, entity, ts: str, pairs):
-    """Tag sides and union: one DataFrame carrying both inputs so a single
-    Exchange co-partitions them."""
-    ents = _entity_cols(entity)
-    rsel = [F.col(c) for c in ents] + [F.col(ts)] + [F.col(src) for src, _ in pairs]
-    r = right.select(*rsel).withColumn(_SIDE, F.lit(0))
-    l = left.withColumn(_SIDE, F.lit(1))
-    return l.unionByName(r, allowMissingColumns=True)
+def _asof_window(left, right, ents, ts, pairs, bound_s, allow_exact, forward=False):
+    """The pure-JVM plan: union the tagged sides, then one window over
+    ``ents`` carries the nearest right payload onto every left row —
+    ``last(payload, ignorenulls=True)`` over ``[unbounded preceding,
+    current row]`` backward, ``first`` over ``[current row, unbounded
+    following]`` forward. The whole plan is Exchange + Sort + WindowExec,
+    no Python boundary. ``bound_s`` (tolerance backward, horizon forward)
+    post-filters on the carried right-ts.
 
-
-def _asof_sort_merge(left, right, entity, ts, pairs, schema, tolerance_s, allow_exact, n):
-    ents = _entity_cols(entity)
-    u = _prep_union(left, right, entity, ts, pairs)
-    # one shuffle co-partitions both sides; sort is within-partition only
-    # (no global range sort needed — merge_asof(by=) handles interleaved keys).
-    u = u.repartition(n, *ents).sortWithinPartitions(ts, _SIDE)
-    kernel = _merge_kernel(left.columns, pairs, entity, ts, tolerance_s, allow_exact, ents)
-    return u.mapInPandas(kernel, schema=schema)
-
-
-def _asof_window(left, right, entity, ts, pairs, tolerance_s, allow_exact):
-    """Pure-JVM strategy: union the tagged sides, then one partitioned
-    window ``last(payload, ignorenulls=True)`` carries the most recent
-    right payload forward onto every left row. Whole plan is Exchange +
-    Sort + WindowExec — no Python boundary at all, so it wins whenever the
-    payload fits a struct column and the entity isn't pathologically hot
-    (window partitions, like mapInPandas groups, are invisible to AQE skew
-    splitting — use 'salted' for hot keys).
-
-    Ordering rule: right rows sort BEFORE left rows at equal ts when
-    allow_exact (so the <=-bound sees them), AFTER when strict. If right
-    has several rows at one (entity, ts), pre-aggregate it — same
-    requirement pd.merge_asof imposes on the other strategies."""
+    Equal-ts visibility is the sort order of the side tag: the right row
+    sorts inside the frame (before the left row backward, after it
+    forward) iff ``allow_exact``. If right has several rows at one
+    (entity, ts), pre-aggregate it — the requirement pd.merge_asof
+    imposes on the broadcast plan too."""
     from pyspark.sql.window import Window
 
-    ents = _entity_cols(entity)
     pay_t = F.struct(
         F.col(ts).alias("__rts"), *[F.col(src).alias(dst) for src, dst in pairs]
     )
+    r_side = int(forward == allow_exact)
     r = right.select(
         *[F.col(c) for c in ents], F.col(ts), pay_t.alias("__pay"),
-        F.lit(0 if allow_exact else 1).alias(_SIDE),
+        F.lit(r_side).alias(_SIDE),
     )
     lkeep = [c for c in left.columns if c not in ents and c != ts]
     l = left.select(
         *[F.col(c) for c in ents], F.col(ts),
         F.lit(None).cast(r.schema["__pay"].dataType).alias("__pay"),
-        F.lit(1 if allow_exact else 0).alias(_SIDE),
+        F.lit(1 - r_side).alias(_SIDE),
         *[F.col(c) for c in lkeep],
     )
     u = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*ents).orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    matched = F.last("__pay", ignorenulls=True).over(w)
-    if tolerance_s is not None:
+    if forward:
+        frame, pick = (Window.currentRow, Window.unboundedFollowing), F.first
+    else:
+        frame, pick = (Window.unboundedPreceding, Window.currentRow), F.last
+    w = Window.partitionBy(*ents).orderBy(ts, _SIDE).rowsBetween(*frame)
+    matched = pick("__pay", ignorenulls=True).over(w)
+    if bound_s is not None:
         # NTZ timestamps can't cast straight to numeric in Spark 4 — hop
         # through TIMESTAMP (session TZ is pinned UTC, so it's the identity)
         sec = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
-        in_tol = (sec(F.col(ts)) - sec(matched["__rts"])) <= tolerance_s
-        matched = F.when(in_tol, matched)
-    left_side = 1 if allow_exact else 0
-    out = (
+        lts, rts = sec(F.col(ts)), sec(matched["__rts"])
+        matched = F.when(((rts - lts) if forward else (lts - rts)) <= bound_s, matched)
+    return (
         u.withColumn("__m", matched)
-        .where(F.col(_SIDE) == left_side)
+        .where(F.col(_SIDE) == 1 - r_side)
         .select(
             *[F.col(c) for c in left.columns],
             *[F.col("__m")[dst].alias(dst) for _, dst in pairs],
         )
     )
-    return out
 
 
 def _naive_utc(s: pd.Series) -> pd.Series:
@@ -453,31 +322,6 @@ def _hot_predicate(ents: list[str], hot_keys):
     for c in conds:
         out = out | c
     return out
-
-
-def _asof_salted(left, right, entity, ts, pairs, schema, tolerance_s, allow_exact, n, salt, hot_keys):
-    ents = _entity_cols(entity)
-    is_hot = _hot_predicate(ents, hot_keys)
-    # left: hot rows spread deterministically across salts (hash of ts —
-    # any stable per-row value works; correctness needs only that the
-    # matching right rows exist under every salt).
-    l = left.withColumn(
-        _SALT, F.when(is_hot, F.pmod(F.xxhash64(F.col(ts)), F.lit(salt)).cast("int")).otherwise(F.lit(0))
-    )
-    # right: hot rows replicated once per salt so every left shard sees
-    # the full as-of history of its entity.
-    r = right.withColumn(
-        "_salts",
-        F.when(is_hot, F.sequence(F.lit(0), F.lit(salt - 1))).otherwise(F.array(F.lit(0))),
-    ).withColumn(_SALT, F.explode("_salts")).drop("_salts")
-
-    rsel = [F.col(c) for c in ents] + [F.col(ts), F.col(_SALT)] + [F.col(src) for src, _ in pairs]
-    rr = r.select(*rsel).withColumn(_SIDE, F.lit(0))
-    ll = l.withColumn(_SIDE, F.lit(1))
-    u = ll.unionByName(rr, allowMissingColumns=True)
-    u = u.repartition(n, *ents, _SALT).sortWithinPartitions(ts, _SIDE)
-    kernel = _merge_kernel(left.columns, pairs, entity, ts, tolerance_s, allow_exact, ents + [_SALT])
-    return u.mapInPandas(kernel, schema=schema)
 
 
 def interval_join(points: DataFrame, intervals: DataFrame, point_ts: str,
@@ -588,62 +432,15 @@ def label_join(
     match timestamps are >= ts for every matched row — the mirror image
     of :func:`asof_join`'s zero-leakage invariant).
 
-    Physical plan mirrors :func:`asof_join`'s pure-JVM ``window``
-    strategy with the frame reversed: tagged union → ONE Exchange on the
-    entity → ``first(payload, ignorenulls=True)`` over
-    ``[current row, unbounded following]``. Equal-ts visibility is the
-    sort order of the side tag (right before left iff strict — outside
-    the forward frame). Same contract as the other strategies: one right
-    row per (entity, ts) — pre-aggregate the build side otherwise — and
-    a loud error on NULL ts.
+    Physical plan: :func:`asof_join`'s ``window`` plan with the frame
+    reversed — tagged union → ONE Exchange on the entity →
+    ``first(payload, ignorenulls=True)`` over ``[current row, unbounded
+    following]``. Same contract as :func:`asof_join`: one right row per
+    (entity, ts) — pre-aggregate the build side otherwise — and a loud
+    error on NULL ts.
     """
-    from pyspark.sql.window import Window
-
-    ents = _entity_cols(entity)
-
-    def _ts_checked(df: DataFrame) -> DataFrame:
-        return df.withColumn(ts, F.when(
-            F.col(ts).isNull(),
-            F.raise_error(F.lit(
-                f"label_join: NULL {ts} — point-in-time rows must carry "
-                "a timestamp")).cast(df.schema[ts].dataType),
-        ).otherwise(F.col(ts)))
-
-    left, right = _ts_checked(left), _ts_checked(right)
+    left = _ts_checked(left, ts, "label_join")
+    right = _ts_checked(right, ts, "label_join")
     pairs = _right_value_cols(left, right, entity, ts, suffix)
-
-    pay_t = F.struct(
-        F.col(ts).alias("__rts"), *[F.col(src).alias(dst) for src, dst in pairs]
-    )
-    # forward frame: at equal ts the right row must sort AT-OR-AFTER the
-    # left row to be visible (allow_exact), BEFORE it to be excluded
-    r = right.select(
-        *[F.col(c) for c in ents], F.col(ts), pay_t.alias("__pay"),
-        F.lit(1 if allow_exact_matches else 0).alias(_SIDE),
-    )
-    lkeep = [c for c in left.columns if c not in ents and c != ts]
-    l = left.select(
-        *[F.col(c) for c in ents], F.col(ts),
-        F.lit(None).cast(r.schema["__pay"].dataType).alias("__pay"),
-        F.lit(0 if allow_exact_matches else 1).alias(_SIDE),
-        *[F.col(c) for c in lkeep],
-    )
-    u = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*ents).orderBy(ts, _SIDE)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    matched = F.first("__pay", ignorenulls=True).over(w)
-    if horizon_s is not None:
-        sec = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
-        in_h = (sec(matched["__rts"]) - sec(F.col(ts))) <= horizon_s
-        matched = F.when(in_h, matched)
-    left_side = 0 if allow_exact_matches else 1
-    return (
-        u.withColumn("__m", matched)
-        .where(F.col(_SIDE) == left_side)
-        .select(
-            *[F.col(c) for c in left.columns],
-            *[F.col("__m")[dst].alias(dst) for _, dst in pairs],
-        )
-    )
+    return _asof_window(left, right, _entity_cols(entity), ts, pairs, horizon_s,
+                        allow_exact_matches, forward=True)

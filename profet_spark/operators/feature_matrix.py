@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from profet_spark.operators.asof import _entity_cols
+from profet_spark.operators.asof import _entity_cols, _ts_checked
 
 _SIDE = "__fm_side"
 
@@ -98,18 +98,6 @@ def _output_names(
             emitted[dst] = f"{name}.{ts}"
         out[name] = pairs
     return out
-
-
-def _ts_checked(df: DataFrame, ts: str) -> DataFrame:
-    # same loud contract as asof_join: point-in-time semantics are
-    # undefined for NULL ts, and the window carry would silently smear
-    # values across it
-    return df.withColumn(ts, F.when(
-        F.col(ts).isNull(),
-        F.raise_error(F.lit(
-            f"point_in_time_matrix: NULL {ts} — point-in-time rows must "
-            "carry a timestamp")).cast(df.schema[ts].dataType),
-    ).otherwise(F.col(ts)))
 
 
 def _tol_for(tolerance_s, name: str):
@@ -187,11 +175,11 @@ def point_in_time_matrix(
     if strategy != "window":
         raise ValueError(f"unknown point_in_time_matrix strategy: {strategy}")
 
-    spine = _ts_checked(spine, ts)
+    spine = _ts_checked(spine, ts, "point_in_time_matrix")
     spine_cols = spine.columns
 
     # right rows order BEFORE left at equal ts for <= semantics, AFTER for
-    # strict < — identical rule to asof._asof_window. All feature tables
+    # strict < — identical rule to asof's window plan. All feature tables
     # share one side value: equal-ts rows of different tables cannot
     # interfere, each carries only its own payload column.
     r_side = 0 if allow_exact_matches else 1
@@ -200,7 +188,7 @@ def point_in_time_matrix(
     tagged = [spine.withColumn(_SIDE, F.lit(l_side))]
     pay_cols = {}
     for name in names:
-        fdf = _ts_checked(features[name], ts)
+        fdf = _ts_checked(features[name], ts, "point_in_time_matrix")
         pay = F.struct(
             F.col(ts).alias("__rts"),
             *[F.col(src).alias(dst) for src, dst in pairs[name]],
@@ -283,7 +271,7 @@ def _pit_sequential(spine, features, pairs, entity, ts, allow_exact,
                 right = right.where(F.lit(False))
                 tol = None
         out = asof_join(
-            out, right, entity=entity, ts=ts, strategy="sort_merge",
+            out, right, entity=entity, ts=ts, strategy="broadcast",
             tolerance_s=tol,
             allow_exact_matches=allow_exact,
         )
@@ -411,8 +399,8 @@ def windowed_spine_agg(
             f"windowed_spine_agg: column(s) {clashes} collide with "
             "internal scratch names — rename them")
     keys = _entity_cols(entity)
-    spine = _ts_checked(spine, ts)
-    feature = _ts_checked(feature, ts)
+    spine = _ts_checked(spine, ts, "point_in_time_matrix")
+    feature = _ts_checked(feature, ts, "point_in_time_matrix")
     srcs = sorted({src for _, src in aggs.values()})
     f_cols = {c: f"__wf_{c}" for c in srcs}
 

@@ -25,7 +25,7 @@ grades them bitwise, and single-pass distributed plans that survive a
   shuffle on the key), a 1-row totals aggregate broadcast back, and a
   ``TakeOrderedAndProject`` for the top-N — the full key histogram is
   never collected or globally sorted. This is the measurement half of
-  the salted as-of strategy (operators/asof.py): profile first, salt
+  the salted as-of window plan (operators/asof.py): profile first, salt
   the keys the profile flags.
 
 Reference parity: ProFET has no input validation or skew handling
@@ -211,7 +211,7 @@ def skew_profile(df: DataFrame, key_cols: list[str] | str, top_n: int = 20,
       ``(cnt*P + total - 1) DIV total``: the number of salted sub-keys
       needed so each slice carries at most one average partition's rows
       (1 = unskewed, leave it alone). This is the measured input to
-      operators/asof.py's salted strategy and to AQE's skew-join
+      operators/asof.py's salted window plan and to AQE's skew-join
       threshold tuning.
     - ``rank`` — 1-based by ``(cnt DESC, key ASC)`` (deterministic
       tiebreak).

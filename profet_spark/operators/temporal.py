@@ -174,7 +174,6 @@ def resample_to_grid(
     entity: str | list[str] = "image_id",
     ts: str = "ts",
     every_seconds: int = 3600,
-    strategy: str = "window",
     max_points_per_entity: int = 1_000_000,
 ) -> DataFrame:
     """W9: regularize an irregular snapshot stream onto a fixed time grid.
@@ -228,7 +227,7 @@ def resample_to_grid(
              F.timestamp_seconds("_ge").cast(df.schema[ts].dataType).alias(ts))
     from profet_spark.operators import asof as _asof  # lazy: avoid pkg-init cycle
 
-    return _asof.asof_join(grid, vals, entity=entity, ts=ts, strategy=strategy)
+    return _asof.asof_join(grid, vals, entity=entity, ts=ts, strategy="window")
 
 
 def rolling_quantile(

@@ -1,6 +1,9 @@
-"""As-of join: all four physical strategies must agree with a pandas
-merge_asof oracle and with each other, including under skew (SURVEY.md
-§5.2-6) and with zero leakage (no right row after left ts is attached)."""
+"""As-of join: both physical plans — ``window`` (plain and salted on hot
+keys) and ``broadcast`` — must agree with a pandas merge_asof oracle and
+with each other, including under skew (SURVEY.md §5.2-6) and with zero
+leakage (no right row after left ts is attached)."""
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -10,6 +13,15 @@ from pyspark.sql import functions as F
 
 from profet_spark.operators import asof
 from profet_spark.operators.asof import asof_join, detect_hot_keys
+
+# "salted" is the window plan salted on the fixture's hot keys
+PLANS = ["broadcast", "salted", "window"]
+
+
+def _plan_kw(plan, hot_keys):
+    if plan == "salted":
+        return dict(strategy="window", hot_keys=hot_keys, salt=4)
+    return dict(strategy=plan)
 
 
 def _mk_fixture(seed=7, n_entities=40, hot_frac=0.3):
@@ -56,40 +68,44 @@ def fixture_dfs(spark):
     return spark.createDataFrame(lp), spark.createDataFrame(rp), lp, rp
 
 
-@pytest.mark.parametrize("strategy", ["sort_merge", "broadcast", "salted", "window"])
+@pytest.mark.parametrize("strategy", PLANS)
 def test_asof_matches_oracle(spark, fixture_dfs, strategy):
     ldf, rdf, lp, rp = fixture_dfs
-    kw = {}
-    if strategy == "salted":
-        kw["hot_keys"] = ["e0000"]
-    got = _norm(asof_join(ldf, rdf, strategy=strategy, **kw).toPandas())
+    got = _norm(asof_join(ldf, rdf, **_plan_kw(strategy, ["e0000"])).toPandas())
     want = _oracle(lp, rp)
     assert len(got) == len(want) == len(lp)
     pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
 
 
 def test_asof_strict_and_tolerance(spark, fixture_dfs):
+    """Every plan reproduces merge_asof across the exact/strict x
+    tolerance matrix."""
     ldf, rdf, lp, rp = fixture_dfs
-    got = _norm(asof_join(ldf, rdf, strategy="sort_merge",
-                          allow_exact_matches=False, tolerance_s=50_000).toPandas())
-    want = _oracle(lp, rp, allow_exact=False, tolerance_s=50_000)
-    pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
+    for plan in PLANS:
+        for allow_exact in (True, False):
+            for tol in (None, 3600.0, 50_000):
+                got = _norm(asof_join(ldf, rdf, **_plan_kw(plan, ["e0000"]),
+                                      allow_exact_matches=allow_exact,
+                                      tolerance_s=tol).toPandas())
+                want = _oracle(lp, rp, allow_exact=allow_exact, tolerance_s=tol)
+                pd.testing.assert_frame_equal(
+                    got, want, check_dtype=False,
+                    obj=f"{plan} allow_exact={allow_exact} tol={tol}")
 
 
 def test_asof_zero_leakage(spark, fixture_dfs):
     """Poison every right row strictly after each left ts: results must be
     unchanged when future rows are dropped entirely."""
     ldf, rdf, lp, rp = fixture_dfs
-    full = _norm(asof_join(ldf, rdf, strategy="sort_merge").toPandas())
     t_cut = lp["ts"].quantile(0.5)
-    l_cut = lp[lp.ts <= t_cut]
-    r_cut = rp[rp.ts <= t_cut]
-    cut = _norm(
-        asof_join(spark.createDataFrame(l_cut), spark.createDataFrame(r_cut),
-                  strategy="sort_merge").toPandas()
-    )
-    full_cut = full[full.ts <= t_cut].reset_index(drop=True)
-    pd.testing.assert_frame_equal(full_cut, cut, check_like=True)
+    l_cut = spark.createDataFrame(lp[lp.ts <= t_cut])
+    r_cut = spark.createDataFrame(rp[rp.ts <= t_cut])
+    for plan in PLANS:
+        kw = _plan_kw(plan, ["e0000"])
+        full = _norm(asof_join(ldf, rdf, **kw).toPandas())
+        cut = _norm(asof_join(l_cut, r_cut, **kw).toPandas())
+        full_cut = full[full.ts <= t_cut].reset_index(drop=True)
+        pd.testing.assert_frame_equal(full_cut, cut, check_like=True, obj=plan)
 
 
 def test_detect_hot_keys(spark, fixture_dfs):
@@ -118,50 +134,22 @@ def test_broadcast_matches_window_in_a_non_utc_session(spark, fixture_dfs, allow
 
 def test_asof_salted_equals_unsalted(spark, fixture_dfs):
     ldf, rdf, lp, rp = fixture_dfs
-    a = _norm(asof_join(ldf, rdf, strategy="sort_merge").toPandas())
-    b = _norm(asof_join(ldf, rdf, strategy="salted", hot_keys=["e0000"], salt=4).toPandas())
+    a = _norm(asof_join(ldf, rdf, strategy="window").toPandas())
+    b = _norm(asof_join(ldf, rdf, strategy="window", hot_keys=["e0000"], salt=4).toPandas())
     pd.testing.assert_frame_equal(a, b, check_like=True)
 
 
-@pytest.mark.parametrize("allow_exact", [True, False])
-@pytest.mark.parametrize("tol", [None, 3600.0])
-def test_window_strategy_equals_sort_merge(spark, fixture_dfs, allow_exact, tol):
-    """The pure-JVM window strategy must reproduce the pandas merge kernel
-    exactly across the exact/strict x tolerance matrix."""
-    ldf, rdf = fixture_dfs[0], fixture_dfs[1]
-    a = _norm(asof_join(ldf, rdf, strategy="sort_merge",
-                        tolerance_s=tol, allow_exact_matches=allow_exact).toPandas())
-    b = _norm(asof_join(ldf, rdf, strategy="window",
-                        tolerance_s=tol, allow_exact_matches=allow_exact).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-
-
-@pytest.mark.parametrize("allow_exact,tol", [(True, None), (False, None),
-                                             (True, 3600.0), (False, 3600.0)])
-def test_sort_merge_streaming_kernel_multi_batch(spark, fixture_dfs, allow_exact, tol):
-    """The merge kernel streams Arrow batches with only a latest-right-per-
-    entity carry; forcing tiny batches (so one partition spans MANY batches,
-    splitting entities and equal-ts runs across batch boundaries) must not
-    change a single row vs the pure-JVM window strategy."""
-    ldf, rdf = fixture_dfs[0], fixture_dfs[1]
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try:
-        a = _norm(asof_join(ldf, rdf, strategy="sort_merge", tolerance_s=tol,
-                            allow_exact_matches=allow_exact).toPandas())
-    finally:
-        spark.conf.set(key, prev)
-    b = _norm(asof_join(ldf, rdf, strategy="window", tolerance_s=tol,
-                        allow_exact_matches=allow_exact).toPandas())
-    pd.testing.assert_frame_equal(a, b)
+def test_asof_rejects_deleted_strategies(spark, fixture_dfs):
+    ldf, rdf, _, _ = fixture_dfs
+    for strategy in ("sort_merge", "salted"):
+        with pytest.raises(ValueError, match="unknown asof strategy"):
+            asof_join(ldf, rdf, strategy=strategy, hot_keys=["e0000"])
 
 
 def test_streaming_kernel_strict_equal_ts_across_batches(spark):
     """Regression: with allow_exact_matches=False, a left row must fall
-    back to the latest right with a STRICTLY smaller ts even when the
-    equal-ts right row arrived in an earlier Arrow batch (the carry keeps
-    the last two distinct-ts rows per entity, not just one)."""
+    back to the latest right with a STRICTLY smaller ts — on every plan,
+    with every row in its own Arrow batch."""
     import datetime
     t = lambda s: datetime.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
     left = spark.createDataFrame([("e", t(2), 1)], ["image_id", "ts", "k"])
@@ -171,17 +159,18 @@ def test_streaming_kernel_strict_equal_ts_across_batches(spark):
     prev = spark.conf.get(key)
     spark.conf.set(key, "1")  # every row its own batch
     try:
-        got = asof_join(left, right, strategy="sort_merge",
-                        allow_exact_matches=False, num_partitions=1).toPandas()
+        for plan in PLANS:
+            got = asof_join(left, right, **_plan_kw(plan, ["e"]),
+                            allow_exact_matches=False).toPandas()
+            assert got.v.tolist() == [10.0], plan
     finally:
         spark.conf.set(key, prev)
-    assert got.v.tolist() == [10.0]
 
 
 def test_streaming_kernel_null_entity_across_batches(spark):
-    """Regression: null entity keys must survive the cross-batch carry
-    (pandas groupby drops NaN groups by default) — multi-batch result must
-    equal the single-batch result."""
+    """Regression: a null entity key is a group of its own, as in
+    merge_asof (pandas groupby drops NaN groups by default) — on every
+    plan, with one or many Arrow batches."""
     import datetime
     t = lambda s: datetime.datetime(2024, 1, 1, 0, 0, s)  # noqa: E731
     left = spark.createDataFrame([(None, t(2), 1), ("e", t(3), 2)],
@@ -191,18 +180,18 @@ def test_streaming_kernel_null_entity_across_batches(spark):
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
 
-    def run():
-        return (asof_join(left, right, strategy="sort_merge",
-                          num_partitions=1).toPandas()
+    def run(plan):
+        return (asof_join(left, right, **_plan_kw(plan, ["e"])).toPandas()
                 .sort_values("k").v.tolist())
 
-    single = run()
-    spark.conf.set(key, "1")
-    try:
-        multi = run()
-    finally:
-        spark.conf.set(key, prev)
-    assert multi == single == [10.0, 30.0]
+    for plan in PLANS:
+        single = run(plan)
+        spark.conf.set(key, "1")
+        try:
+            multi = run(plan)
+        finally:
+            spark.conf.set(key, prev)
+        assert multi == single == [10.0, 30.0], plan
 
 
 def test_asof_auto_strategy_selection(spark, sf_dir):
@@ -244,8 +233,8 @@ def _jobs_during(spark, fn):
 def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp_path):
     """With a parquet-backed right side, auto sizes the build side from
     footer row counts: no probe job runs while the plan is built. Past the
-    threshold it picks sort-merge (no job at all); at it, broadcast (only
-    the build side's collect)."""
+    threshold it picks the pure-JVM window plan (no job at all); at it,
+    broadcast (only the build side's collect)."""
     from profet_spark import plans
     ldf, rdf, lp, rp = fixture_dfs
     path = str(tmp_path / "right")
@@ -256,7 +245,7 @@ def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp
     merged, jobs = _jobs_during(spark, lambda: asof_join(
         ldf, right, strategy="auto", broadcast_threshold=len(rp) - 1))
     assert not jobs
-    assert plans.has_node(merged, "Exchange") and "MapInPandas" in plans.formatted_plan(merged)
+    assert plans.has_node(merged, "Window") and plans.is_python_free(merged)
     got = _norm(merged.toPandas())
     pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
 
@@ -269,7 +258,8 @@ def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp
 
 def test_asof_auto_upgrades_to_salted_on_hot_keys(spark, sf_dir):
     """auto + hot_keys (and a large-ish build side) must take the salted
-    path — observable by the salt projection in the plan."""
+    window plan: its one Exchange hashes on the salt too, and no row
+    crosses into Python."""
     from profet_spark import plans
     from profet_spark.sources import load_table
     ev = load_table(spark, sf_dir, "events").select(
@@ -277,7 +267,9 @@ def test_asof_auto_upgrades_to_salted_on_hot_keys(spark, sf_dir):
     right = ev.groupBy("user_id", "ts").agg(F.max("value").alias("rv"))
     out = asof_join(ev, right, entity="user_id", ts="ts", strategy="auto",
                          hot_keys=[1, 2], broadcast_threshold=10)
-    assert "__asof_salt" in plans.formatted_plan(out)
+    plan = plans.formatted_plan(out)
+    assert re.search(r"Arguments: hashpartitioning\([^)]*__asof_salt", plan), plan
+    assert plans.has_node(out, "Window") and plans.is_python_free(out)
     want = (asof_join(ev, right, entity="user_id", ts="ts", strategy="window")
             .toPandas().sort_values("event_id").reset_index(drop=True))
     got = out.toPandas().sort_values("event_id").reset_index(drop=True)
@@ -299,14 +291,14 @@ def test_asof_null_ts_raises_in_every_strategy(spark, fixture_dfs):
     ldf, rdf, lp, rp = fixture_dfs
     lnull = ldf.withColumn(
         "ts", F.when(F.col("x") == lp.x.iloc[0], None).otherwise(F.col("ts")))
-    for strategy in ["sort_merge", "broadcast", "salted", "window"]:
+    for strategy in ["broadcast", "window"]:
         with pytest.raises(Exception, match="NULL ts"):
             asof_join(lnull, rdf, strategy=strategy,
                       hot_keys=["e0001"]).count()
     rnull = rdf.withColumn(
         "ts", F.when(F.col("upd") == rp.upd.iloc[0], None).otherwise(F.col("ts")))
     with pytest.raises(Exception, match="NULL ts"):
-        asof_join(ldf, rnull, strategy="sort_merge").count()
+        asof_join(ldf, rnull, strategy="window").count()
 
 
 def test_asof_output_name_collision_raises(spark, fixture_dfs):
@@ -315,7 +307,7 @@ def test_asof_output_name_collision_raises(spark, fixture_dfs):
     ldf, rdf, _, _ = fixture_dfs
     left2 = ldf.withColumn("upd", F.lit(1.0)).withColumn("upd_r", F.lit(2.0))
     with pytest.raises(ValueError, match="collides"):
-        asof_join(left2, rdf, strategy="sort_merge")
+        asof_join(left2, rdf, strategy="window")
 
 
 # ---------------------------------------------------------- composite keys
@@ -345,13 +337,12 @@ def _mk_composite_fixture(seed=23, n_entities=12):
     return lp, rp.reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["sort_merge", "broadcast", "salted", "window"])
+@pytest.mark.parametrize("strategy", PLANS)
 def test_asof_composite_key_matches_oracle(spark, strategy):
     lp, rp = _mk_composite_fixture()
     ldf, rdf = spark.createDataFrame(lp), spark.createDataFrame(rp)
-    hot = [("e000", "a"), ("e001", "b")] if strategy == "salted" else None
-    out = asof_join(ldf, rdf, entity=["image_id", "cam"], ts="ts",
-                    strategy=strategy, hot_keys=hot).toPandas()
+    kw = _plan_kw(strategy, [("e000", "a"), ("e001", "b")])
+    out = asof_join(ldf, rdf, entity=["image_id", "cam"], ts="ts", **kw).toPandas()
     want = pd.merge_asof(
         lp.sort_values("ts", kind="mergesort"),
         rp.sort_values("ts", kind="mergesort"),

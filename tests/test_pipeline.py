@@ -142,7 +142,7 @@ def test_zero_leakage_full_pipeline(spark, snap):
 
     def featurize(d):
         out = td.add_caption_features(d.select("image_id", "ts", "caption"), flatten=True)
-        out = asof.asof_join(out, upd, entity="image_id", ts="ts", strategy="sort_merge")
+        out = asof.asof_join(out, upd, entity="image_id", ts="ts", strategy="window")
         out = temporal.ffill(out, ["upd"], entity="image_id", ts="ts")
         out = temporal.sessionize(out, gap_seconds=7200, entity="image_id", ts="ts")
         out = temporal.expanding_stats(out, "entropy", entity="image_id", ts="ts",

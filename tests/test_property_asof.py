@@ -1,6 +1,6 @@
 """Hypothesis property test for the as-of join (SURVEY.md §5.2): on
 arbitrary small inputs — duplicate timestamps, empty sides, single-entity,
-interleaved entities — every strategy must equal pandas ``merge_asof``
+interleaved entities — every plan must equal pandas ``merge_asof``
 (the independent reference implementation of the backward as-of
 semantics)."""
 
@@ -28,7 +28,7 @@ def asof_case(draw):
     right_rows = {}
     for _ in range(n_right):
         # unique (entity, ts) on the build side — the operator contract
-        # (pre-aggregate duplicates upstream, as every strategy documents)
+        # (pre-aggregate duplicates upstream, as every plan documents)
         key = (draw(hst.sampled_from(ents)),
                _ts_pool[draw(hst.integers(0, len(_ts_pool) - 1))])
         right_rows[key] = float(draw(hst.integers(-5, 5)))
@@ -53,13 +53,16 @@ def _want(left, right, allow_exact):
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(case=asof_case(), allow_exact=hst.booleans(),
-       strategy=hst.sampled_from(["window", "sort_merge", "broadcast"]))
+       strategy=hst.sampled_from(["window", "salted", "broadcast"]))
 def test_asof_property(spark, case, allow_exact, strategy):
     left, right = case
     ldf = spark.createDataFrame(left)
     rdf = spark.createDataFrame(right, schema="user_id string, ts timestamp, rv double")
+    # "salted": the window plan salted on one hot entity
+    kw = (dict(strategy="window", hot_keys=["e1"], salt=3)
+          if strategy == "salted" else dict(strategy=strategy))
     got = (asof.asof_join(ldf, rdf, entity="user_id", ts="ts",
-                          strategy=strategy, allow_exact_matches=allow_exact)
+                          allow_exact_matches=allow_exact, **kw)
            .toPandas().sort_values("event_id").reset_index(drop=True))
     want = _want(left, right, allow_exact)
     assert got["event_id"].tolist() == want["event_id"].tolist()

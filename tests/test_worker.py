@@ -7,7 +7,6 @@ runs."""
 import ast
 import importlib
 import pathlib
-import subprocess
 import sys
 import zipfile
 import zipimport
@@ -186,18 +185,3 @@ def test_every_nested_kernel_loads_the_package():
     assert not unresolved, f"kernel argument not resolvable: {unresolved}"
     assert not missing, f"kernels that never run the worker init: {missing}"
 
-
-def test_asof_merge_kernel_unpickles_into_the_package():
-    """The sort-merge kernel, unpickled in a fresh interpreter, imports
-    profet_spark (and so runs the init) although it uses only pandas."""
-    from pyspark import cloudpickle
-
-    from profet_spark.operators import asof
-
-    kernel = asof._merge_kernel(["image_id", "ts"], [("v", "v_r")], "image_id",
-                                "ts", None, True, ["image_id"])
-    code = ("import pickle, sys; pickle.loads(sys.stdin.buffer.read()); "
-            "print('profet_spark._worker' in sys.modules)")
-    out = subprocess.run([sys.executable, "-c", code], input=cloudpickle.dumps(kernel),
-                         capture_output=True, cwd=PKG.parent, check=True)
-    assert out.stdout.strip() == b"True"
