@@ -139,6 +139,19 @@ def test_asof_salted_equals_unsalted(spark, fixture_dfs):
     pd.testing.assert_frame_equal(a, b, check_like=True)
 
 
+@pytest.mark.parametrize("allow_exact", [True, False])
+@pytest.mark.parametrize("tol", [None, 3600.0])
+def test_window_strategy_equals_sort_merge(spark, fixture_dfs, allow_exact, tol):
+    """The pure-JVM window strategy must reproduce a sort-merge as-of (both
+    sides sorted by ts, merged per entity: pandas merge_asof) exactly
+    across the exact/strict x tolerance matrix."""
+    ldf, rdf, lp, rp = fixture_dfs
+    got = _norm(asof_join(ldf, rdf, strategy="window",
+                          tolerance_s=tol, allow_exact_matches=allow_exact).toPandas())
+    want = _oracle(lp, rp, allow_exact=allow_exact, tolerance_s=tol)
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_asof_rejects_deleted_strategies(spark, fixture_dfs):
     ldf, rdf, _, _ = fixture_dfs
     for strategy in ("sort_merge", "salted"):
