@@ -3291,9 +3291,9 @@ def _q_event_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D6: connected components over the D3 MinHash-LSH pair edges —
-    (id, cluster_id=min member id). The min-label fixpoint is unique, so
-    the iterative Spark loop grades hash-exact against a DuckDB recursive
-    CTE over the same pair SQL."""
+    (id, cluster_id=min member id). The min-member label is unique, so the
+    large-star/small-star loop, stopped by its star-forest probe, grades
+    hash-exact against a DuckDB recursive CTE over the same pair SQL."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, k=3, threshold=0.5)
     return dedup.dup_clusters(pairs)
@@ -4971,11 +4971,12 @@ def oracle_sql() -> dict[str, str]:
         SELECT o_custkey, n FROM ({d['o4_set_ops']})
         ORDER BY n DESC, o_custkey ASC LIMIT 25
     """
-    # D6: min-label connected components — the recursive CTE enumerates,
+    # D6: min-member connected components — the recursive CTE enumerates,
     # for every node, the labels of ALL reachable nodes (transitive
     # closure over the symmetrized D3 edges); min per node is the unique
-    # fixpoint the Spark propagation loop converges to. Closure size is
-    # bounded by sum(component^2) — fine for graded pair volumes.
+    # label the Spark large-star/small-star loop reads off its final star
+    # forest. Closure size is bounded by sum(component^2) — fine for
+    # graded pair volumes.
     d["d6_dup_clusters"] = f"""
         WITH RECURSIVE p AS ({d['d3_minhash_lsh']}),
         e AS (SELECT id_a AS a, id_b AS b FROM p

@@ -25,7 +25,7 @@ D5  embedding_dup_pairs  — cosine near-dup over quantized int64 vectors
                            (exact, order-insensitive arithmetic; see
                            functions/hashing.py).
 D6  dup_clusters         — connected components over any pair output
-                           (min-label propagation; cluster_id = min member
+                           (large-star/small-star; cluster_id = min member
                            id), the canonical-keeper step that turns pair
                            edges into keep/drop decisions.
 D7  drop_duplicate_segments — C4/CCNet-style corpus-level line dedup
@@ -697,123 +697,94 @@ def embedding_dup_pairs(df: DataFrame, id_col: str = "vec_id", vec_col: str = "e
     )
 
 
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """Both directions ``(u, v)`` of every ``(a, b)`` edge, once each, with
+    ``u``'s smallest and largest neighbour (``mn``, ``mx``) and ``prev``,
+    its next smaller neighbour (null on exactly one row per ``u``). One
+    Exchange on ``u`` serves the dedupe and both aggregates."""
+    sym = edges.select(F.inline(F.array(
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+        F.struct(F.col("b").alias("u"), F.col("a").alias("v")))))
+    by_u = Window.partitionBy("u")
+    return (sym.select("u", "v", F.lag("v").over(by_u.orderBy("v")).alias("prev"),
+                       F.min("v").over(by_u).alias("mn"),
+                       F.max("v").over(by_u).alias("mx"))
+            .where(F.col("prev").isNull() | (F.col("prev") != F.col("v"))))
+
+
+def _star_round(adj: DataFrame) -> DataFrame:
+    """One large-star then one small-star step over a filled adjacency
+    cache; the result is an ``(a, b)`` edge set with ``a > b`` (an id
+    seen only in a self-pair keeps its ``(u, u)`` loop). The cache is read
+    through a leaf over its rows, so the round's plan holds one round, not
+    all before it (each nested cached plan prints its initial and final
+    adaptive plans, doubling per round); the RDD lineage still reaches the
+    source, so a released cache recomputes."""
+    spark = adj.sparkSession
+    adj = DataFrame(spark._jsparkSession.createDataFrame(
+        adj._jdf.javaRDD(), adj._jdf.schema()), spark)
+    # large-star: every larger neighbour v of u joins m(u) = min(u, nbrs(u))
+    alone = (F.col("mn") == F.col("u")) & (F.col("mx") == F.col("u"))
+    large = (adj.where((F.col("v") > F.col("u")) | alone)
+             .select(F.col("v").alias("a"), F.least("u", "mn").alias("b")))
+    # small-star: a and each of its (smaller) neighbours join m = min(nbrs(a))
+    small = large.withColumn("m", F.min("b").over(Window.partitionBy("a")))
+    return small.selectExpr("if(b = m, a, b) AS a", "m AS b")
+
+
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                 max_iter: int = 50,
-                 algorithm: str = "propagate") -> DataFrame:
+                 max_iter: int = 50) -> DataFrame:
     """D6: connected components over near-dup pair edges.
 
     Input: any D2-D5 pair output. Output: ``(id, cluster_id)`` for every
-    id appearing in a pair, where ``cluster_id`` is the MINIMUM member id
-    of the component — the canonical-keeper convention (keep cluster_id,
-    drop the rest), deterministic regardless of iteration order and
-    algorithm, so the fixpoint is reproducible in a DuckDB recursive CTE
-    for grading.
+    id in a pair (an id seen only in a self-pair is its own cluster),
+    where ``cluster_id`` is the MINIMUM member id of the component — the
+    canonical-keeper convention (keep cluster_id, drop the rest), unique
+    and iteration-order-independent, so a DuckDB recursive CTE grades it.
 
-    ``algorithm``:
-    - ``"propagate"`` (default): min-label propagation — each round every
-      node takes the minimum label among itself and its neighbors;
-      converges in O(component diameter) rounds. Near-dup components are
-      shallow (band-collision cliques), so rounds stay in the single
-      digits and each round is just one edge-key shuffle + label join.
-    - ``"star"``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond") — O(log n) rounds
-      regardless of diameter; the warehouse-scale choice when components
-      can be long chains (transitive near-dup drift). Both phases keep
-      edges pointing from larger to smaller id, and each round is two
-      groupBy-min + join steps over the (shrinking) edge set.
-
-    Both loops persist per round, unpersist the previous round, and
-    ``localCheckpoint`` periodically to truncate lineage (the standard
-    Spark idiom for iterative algorithms); the driver carries only a
-    1-row convergence probe per round, never the data.
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): O(log n) rounds at
+    any component diameter. A round reads the previous round's persisted
+    adjacency once, through two ``min`` windows and an explode (no groupBy,
+    no self-join). Its one action is the exact convergence probe, which
+    also fills its cache: the edge set is the fixpoint exactly when it is
+    a star forest, i.e. no node has both a smaller neighbour and more than
+    one neighbour. Only then is the previous round unpersisted, so the new
+    cache is never re-planned from source. At the fixpoint a node's label
+    is the smaller of itself and its smallest neighbour (its star's root).
     """
-    if algorithm == "star":
-        return _dup_clusters_star(pairs, id_a, id_b, max_iter)
-    if algorithm != "propagate":
-        raise ValueError(f"unknown dup_clusters algorithm: {algorithm!r}")
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-             .distinct().persist()
-    lbl = (edges.select(F.col("a").alias("id")).distinct()
-           .withColumn("lbl", F.col("id")).persist())
-    try:
-        for i in range(max_iter):
-            nb = (edges.join(lbl.withColumnRenamed("id", "b"), "b")
-                  .groupBy("a").agg(F.min("lbl").alias("nlbl")))
-            new = (lbl.join(nb.withColumnRenamed("a", "id"), "id", "left")
-                   .select("id", F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl")))
-            new = new.localCheckpoint(eager=True) if i % 3 == 2 else new.persist()
-            changed = (new.alias("n").join(lbl.alias("o"), "id")
-                       .where(F.col("n.lbl") != F.col("o.lbl"))
-                       .limit(1).count())
-            lbl.unpersist()
-            lbl = new
-            if changed == 0:
-                _register(lbl)
-                return lbl.select("id", F.col("lbl").alias("cluster_id"))
-        lbl.unpersist()
+    e = pairs.select(F.greatest(id_a, id_b).alias("a"),
+                     F.least(id_a, id_b).alias("b"))
+    unsettled = (F.col("mn") < F.col("u")) & (F.col("mn") < F.col("mx"))
+    adj = _adjacency(e).persist()
+    settled = adj.where(unsettled).count() == 0       # fills adj's cache
+    for _ in range(max_iter):
+        if settled:
+            break
+        new = _adjacency(_star_round(adj)).persist()
+        settled = new.where(unsettled).count() == 0   # fills new's cache
+        adj.unpersist()
+        adj = new
+    if not settled:
+        adj.unpersist()
         raise RuntimeError(
-            f"dup_clusters: no fixpoint after {max_iter} rounds — component "
-            "diameter exceeds max_iter; raise it or use algorithm='star'")
-    finally:
-        edges.unpersist()
+            f"dup_clusters: no fixpoint after {max_iter} large-star/small-star "
+            "rounds; raise max_iter")
+    return _register(adj).where(F.col("prev").isNull()).select(
+        F.col("u").alias("id"), F.least("u", "mn").alias("cluster_id"))
 
 
-def _dup_clusters_star(pairs: DataFrame, id_a: str, id_b: str,
-                       max_iter: int) -> DataFrame:
-    """Large-star/small-star connected components (see dup_clusters).
-
-    Invariant both phases preserve: every edge points from the larger id
-    to the smaller (``a > b``). At the fixpoint the edge set is a union
-    of stars (member -> component min); semantics pinned against a python
-    union-find reference in tests (random graphs + long paths)."""
-    e = (pairs.select(F.col(id_a).alias("x"), F.col(id_b).alias("y"))
-         .where(F.col("x") != F.col("y")))
-    E = (e.select(F.greatest("x", "y").alias("a"), F.least("x", "y").alias("b"))
-         .distinct().persist())
-    for i in range(max_iter):
-        # large-star: over the symmetrized adjacency of u, connect every
-        # LARGER neighbor v to m(u) = min(neighbors(u) + {u})
-        sym = E.unionByName(
-            E.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        m = (sym.groupBy("a").agg(F.min("b").alias("mn"))
-             .select("a", F.least("mn", F.col("a")).alias("m")))
-        e1 = (sym.join(m, "a").where(F.col("b") > F.col("a"))
-              .select(F.col("b").alias("a"), F.col("m").alias("b"))
-              .where(F.col("a") != F.col("b")).distinct())
-        # small-star: edges already point downward, so
-        # m(u) = min(neighbors(u)); connect every neighbor AND u to it
-        m2 = e1.groupBy("a").agg(F.min("b").alias("m"))
-        nbrs = (e1.join(m2, "a").where(F.col("b") != F.col("m"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b")))
-        selfs = m2.select("a", F.col("m").alias("b"))
-        e2 = (nbrs.unionByName(selfs)
-              .where(F.col("a") != F.col("b")).distinct())
-        e2 = e2.localCheckpoint(eager=True) if i % 2 == 1 else e2.persist()
-        # converged when the round is a no-op (set equality, both ways)
-        grew = e2.subtract(E).limit(1).count()
-        shrank = E.subtract(e2).limit(1).count() if grew == 0 else 1
-        E.unpersist()
-        E = e2
-        if grew == 0 and shrank == 0:
-            _register(E)
-            members = E.select(F.col("a").alias("id"),
-                               F.col("b").alias("cluster_id"))
-            roots = (E.select("b").distinct()
-                     .join(E.select(F.col("a").alias("b")).distinct(),
-                           "b", "left_anti")
-                     .select(F.col("b").alias("id"),
-                             F.col("b").alias("cluster_id")))
-            return members.unionByName(roots)
-    E.unpersist()
-    raise RuntimeError(
-        f"dup_clusters(star): no fixpoint after {max_iter} rounds")
+def _keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """``df`` without the non-canonical member of every D6 cluster over
+    ``pairs``: one anti-join that shuffles ids only."""
+    drops = (dup_clusters(pairs).where(F.col("id") != F.col("cluster_id"))
+             .select(F.col("id").alias(id_col)))
+    return df.join(drops, id_col, "left_anti")
 
 
 def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", k: int = 3,
                          threshold: float = 0.5,
-                         algorithm: str = "propagate",
                          **lsh_kwargs) -> DataFrame:
     """One-call corpus near-dedup: keep exactly ONE canonical document
     per near-duplicate cluster (the minimum id — the D6 convention).
@@ -835,10 +806,7 @@ def drop_near_duplicates(df: DataFrame, id_col: str = "doc_id",
     """
     pairs = minhash_lsh_pairs(df, id_col=id_col, text_col=text_col, k=k,
                               threshold=threshold, **lsh_kwargs)
-    clusters = dup_clusters(pairs, algorithm=algorithm)
-    drops = (clusters.where(F.col("id") != F.col("cluster_id"))
-             .select(F.col("id").alias(id_col)))
-    return df.join(drops, id_col, "left_anti")
+    return _keep_canonical(df, pairs, id_col)
 
 
 def semantic_dup_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -970,7 +938,6 @@ def semantic_dup_pairs(df: DataFrame, id_col: str = "vec_id",
 def semdedup(df: DataFrame, id_col: str = "vec_id",
              vec_col: str = "embedding",
              n_centroids: int = 8, threshold: float = 0.9,
-             algorithm: str = "propagate",
              **pair_kwargs) -> DataFrame:
     """D9 keep-one: SemDeDup pruning — drop all but one document per
     semantic-duplicate group, keeping the MINIMUM id (the engine-wide D6
@@ -986,10 +953,7 @@ def semdedup(df: DataFrame, id_col: str = "vec_id",
     pairs = semantic_dup_pairs(df, id_col=id_col, vec_col=vec_col,
                                n_centroids=n_centroids, threshold=threshold,
                                **pair_kwargs)
-    clusters = dup_clusters(pairs, algorithm=algorithm)
-    drops = (clusters.where(F.col("id") != F.col("cluster_id"))
-             .select(F.col("id").alias(id_col)))
-    return df.join(drops, id_col, "left_anti")
+    return _keep_canonical(df, pairs, id_col)
 
 
 # --------------------------------------------------------------- D10 spans
@@ -1189,8 +1153,7 @@ def drop_near_duplicate_images(df: DataFrame, id_col: str = "image_id",
                                fmt_col: str = "fmt",
                                hash_col: str | None = None,
                                max_hamming: int = 3,
-                               max_bucket: int | None = None,
-                               algorithm: str = "propagate") -> DataFrame:
+                               max_bucket: int | None = None) -> DataFrame:
     """One-call image near-dedup: keep exactly ONE canonical image per
     perceptual near-duplicate cluster (minimum id — the D6 convention),
     the image-payload twin of :func:`drop_near_duplicates`.
@@ -1224,10 +1187,7 @@ def drop_near_duplicate_images(df: DataFrame, id_col: str = "image_id",
         hash_name = hash_col
     pairs = hamming_pairs(sigs, id_col=id_col, bits_col=hash_name,
                           max_hamming=max_hamming, max_bucket=max_bucket)
-    clusters = dup_clusters(pairs, algorithm=algorithm)
-    drops = (clusters.where(F.col("id") != F.col("cluster_id"))
-             .select(F.col("id").alias(id_col)))
-    return df.join(drops, id_col, "left_anti")
+    return _keep_canonical(df, pairs, id_col)
 
 
 def incremental_near_dup_pairs(batch: DataFrame,

@@ -24,3 +24,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)`` -> (fn()'s result, ids of the Spark jobs fn
+    started), through the status tracker's job ids for a job group set
+    around the call."""
+    sc, group = spark.sparkContext, "jobs-during"
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        sc.setJobGroup(group, "jobs counted by a test")
+        try:
+            before = set(tracker.getJobIdsForGroup(group))
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+        return out, set(tracker.getJobIdsForGroup(group)) - before
+    return run

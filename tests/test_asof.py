@@ -227,23 +227,8 @@ def test_asof_auto_strategy_selection(spark, sf_dir):
     assert got["rv"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
 
 
-def _jobs_during(spark, fn):
-    """(result of fn(), ids of the Spark jobs fn started), through the
-    status tracker's job ids for a job group set around the call."""
-    sc, group = spark.sparkContext, "asof-auto-plan"
-    tracker = sc.statusTracker()
-    sc.setJobGroup(group, "asof_join(strategy='auto') plan build")
-    try:
-        before = set(tracker.getJobIdsForGroup(group))
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
-    return out, set(tracker.getJobIdsForGroup(group)) - before
-
-
-def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp_path):
+def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp_path,
+                                                          jobs_during):
     """With a parquet-backed right side, auto sizes the build side from
     footer row counts: no probe job runs while the plan is built. Past the
     threshold it picks the pure-JVM window plan (no job at all); at it,
@@ -255,14 +240,14 @@ def test_asof_auto_reads_parquet_footers_not_a_probe_job(spark, fixture_dfs, tmp
     right = spark.read.parquet(path)
     want = _oracle(lp, rp)
 
-    merged, jobs = _jobs_during(spark, lambda: asof_join(
+    merged, jobs = jobs_during(lambda: asof_join(
         ldf, right, strategy="auto", broadcast_threshold=len(rp) - 1))
     assert not jobs
     assert plans.has_node(merged, "Window") and plans.is_python_free(merged)
     got = _norm(merged.toPandas())
     pd.testing.assert_series_equal(got["upd"], want["upd"], check_names=False)
 
-    merged, jobs = _jobs_during(spark, lambda: asof_join(
+    merged, jobs = jobs_during(lambda: asof_join(
         ldf, right, strategy="auto", broadcast_threshold=len(rp)))
     assert len(jobs) == 1 and plans.is_shuffle_free(merged)
     got = _norm(merged.toPandas())

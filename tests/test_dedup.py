@@ -256,18 +256,25 @@ def test_minhash_signature_table_s7_composition(spark, docs, tmp_path):
 
 
 def test_dup_clusters_chain_and_clique(spark):
-    """D6 must label a CHAIN component (diameter > 1 — forces multi-round
-    propagation) and a separate clique with their min member ids."""
+    """D6 must label a CHAIN component (diameter > 1 — forces more than
+    one round) and a separate clique with their min member ids, and keep
+    an id seen only in a self-pair as its own cluster."""
     from profet_spark.operators import dedup as D
 
     pairs = spark.createDataFrame(
         [(1, 5), (5, 9), (9, 12),          # chain 1-5-9-12
          (20, 21), (20, 22), (21, 22),     # clique
-         (30, 31)],                        # pair
+         (30, 31),                         # pair
+         (40, 40)],                        # self-pair only
         "id_a bigint, id_b bigint")
     got = D.dup_clusters(pairs).toPandas().sort_values("id").reset_index(drop=True)
-    want = {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
+    want = {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30,
+            40: 40}
     assert dict(zip(got.id, got.cluster_id)) == want
+    # an already-settled edge set (no round runs) keeps its self-pair too
+    settled = spark.createDataFrame([(5, 5), (1, 2)], "id_a bigint, id_b bigint")
+    assert {(r.id, r.cluster_id) for r in D.dup_clusters(settled).collect()} \
+        == {(5, 5), (1, 1), (2, 1)}
 
 
 def test_simhash_pairs_from_materialized_signatures(spark, docs, tmp_path):
@@ -293,83 +300,82 @@ def test_simhash_pairs_from_materialized_signatures(spark, docs, tmp_path):
     assert "sequence" not in plan.lower() and "parquet" in plan.lower()
 
 
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _path(lo, hops):
+    return [(i, i + 1) for i in range(lo, lo + hops)]
+
+
 def test_dup_clusters_matches_union_find_reference(spark):
-    """D6 vs an independent python union-find on seeded random graphs
-    (including a long path to force many propagation rounds)."""
+    """D6 vs an independent python union-find on seeded random graphs,
+    each with a long path (diameter 15, and 40 on the last graph, which
+    must still settle within 15 large-star/small-star rounds)."""
     import numpy as np
 
     from profet_spark.operators import dedup as D
 
-    def union_find(edges):
-        parent = {}
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in parent}
+    def graph(rng, hops):
+        edges = {(int(a), int(b)) for a, b in rng.integers(0, 40, (60, 2)) if a != b}
+        return edges | set(_path(100, hops))
 
     rng = np.random.default_rng(3)
-    for trial in range(3):
-        n = 40
-        edges = {(int(a), int(b)) for a, b in rng.integers(0, n, (60, 2)) if a != b}
-        edges |= {(i, i + 1) for i in range(100, 115)}  # path: diameter 15
+    graphs = [graph(rng, 15) for _ in range(3)]
+    graphs.append(graph(np.random.default_rng(5), 40))
+    for trial, edges in enumerate(graphs):
         pairs = spark.createDataFrame(
             [(min(a, b), max(a, b)) for a, b in edges], "id_a bigint, id_b bigint")
         got = {int(r.id): int(r.cluster_id)
-               for r in D.dup_clusters(pairs).collect()}
-        want = union_find(edges)
-        assert got == want, f"trial {trial}"
+               for r in D.dup_clusters(pairs, max_iter=15).collect()}
+        assert got == _union_find(edges), f"trial {trial}"
 
 
-def test_dup_clusters_star_matches_union_find(spark):
-    """The large-star/small-star variant (O(log n) rounds) must agree with
-    union-find AND with the propagate variant, including on a long path
-    whose diameter exceeds propagate's budget economics."""
-    import numpy as np
-
+def test_dup_clusters_job_budget(spark, jobs_during):
+    """A round is one probe action: 40 disjoint pairs are a star forest
+    from the start (no round runs), and a 40-hop path settles within 15
+    rounds at a few jobs each. Counted: the call plus collecting its
+    result."""
     from profet_spark.operators import dedup as D
 
-    rng = np.random.default_rng(5)
-    n = 40
-    edges = {(int(a), int(b)) for a, b in rng.integers(0, n, (60, 2)) if a != b}
-    edges |= {(i, i + 1) for i in range(100, 140)}  # path: diameter 40
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], "id_a bigint, id_b bigint")
+    def run(edges):
+        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        rows, jobs = jobs_during(
+            lambda: D.dup_clusters(pairs, max_iter=15).collect())
+        assert {r.id: r.cluster_id for r in rows} == _union_find(edges)
+        return len(jobs)
 
-    def union_find(edges):
-        parent = {}
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n_: find(n_) for n_ in parent}
-
-    got = {int(r.id): int(r.cluster_id)
-           for r in D.dup_clusters(pairs, algorithm="star", max_iter=15).collect()}
-    assert got == union_find(edges)
-    # the 40-hop path converged within 15 star rounds — beyond what
-    # propagate could do in 15 (needs ~40); also cross-check propagate
-    # at a budget that CAN converge
-    got_prop = {int(r.id): int(r.cluster_id)
-                for r in D.dup_clusters(pairs, max_iter=60).collect()}
-    assert got_prop == got
+    assert run([(2 * i, 2 * i + 1) for i in range(40)]) <= 8
+    assert run(_path(100, 40)) <= 80
 
 
-def test_dup_clusters_bad_algorithm_raises(spark):
+def test_persist_scope_releases_dup_clusters_rounds(spark):
+    """A multi-round dup_clusters inside a PersistScope leaves no
+    persistent RDD once the scope exits, and the released result still
+    recounts correctly from source."""
     from profet_spark.operators import dedup as D
-    pairs = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    with pytest.raises(ValueError, match="algorithm"):
-        D.dup_clusters(pairs, algorithm="bfs")
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    base = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    pairs = spark.createDataFrame(_path(100, 40), "id_a bigint, id_b bigint")
+    with D.PersistScope():
+        clusters = D.dup_clusters(pairs, max_iter=15)
+        want = {(r.id, r.cluster_id) for r in clusters.collect()}
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= base
+    assert {(r.id, r.cluster_id) for r in clusters.collect()} == want
+    assert want == {(i, 100) for i in range(100, 141)}
 
 
 def test_drop_duplicate_segments_line_mode(spark):
