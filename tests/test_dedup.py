@@ -320,26 +320,45 @@ def _path(lo, hops):
 
 
 def test_dup_clusters_matches_union_find_reference(spark):
-    """D6 vs an independent python union-find on seeded random graphs,
-    each with a long path (diameter 15, and 40 on the last graph, which
-    must still settle within 15 large-star/small-star rounds)."""
+    """D6 vs an independent python union-find on seeded random graphs
+    (including a long path to force many rounds)."""
     import numpy as np
 
     from profet_spark.operators import dedup as D
 
-    def graph(rng, hops):
-        edges = {(int(a), int(b)) for a, b in rng.integers(0, 40, (60, 2)) if a != b}
-        return edges | set(_path(100, hops))
-
     rng = np.random.default_rng(3)
-    graphs = [graph(rng, 15) for _ in range(3)]
-    graphs.append(graph(np.random.default_rng(5), 40))
-    for trial, edges in enumerate(graphs):
+    for trial in range(3):
+        n = 40
+        edges = {(int(a), int(b)) for a, b in rng.integers(0, n, (60, 2)) if a != b}
+        edges |= set(_path(100, 15))  # path: diameter 15
         pairs = spark.createDataFrame(
             [(min(a, b), max(a, b)) for a, b in edges], "id_a bigint, id_b bigint")
         got = {int(r.id): int(r.cluster_id)
-               for r in D.dup_clusters(pairs, max_iter=15).collect()}
+               for r in D.dup_clusters(pairs).collect()}
         assert got == _union_find(edges), f"trial {trial}"
+
+
+def test_dup_clusters_star_matches_union_find(spark):
+    """The large-star/small-star loop (O(log n) rounds) must agree with
+    union-find on a long path whose diameter (40) exceeds its round
+    budget (15), and a larger budget must give the same labels."""
+    import numpy as np
+
+    from profet_spark.operators import dedup as D
+
+    rng = np.random.default_rng(5)
+    n = 40
+    edges = {(int(a), int(b)) for a, b in rng.integers(0, n, (60, 2)) if a != b}
+    edges |= set(_path(100, 40))  # path: diameter 40
+    pairs = spark.createDataFrame(
+        [(min(a, b), max(a, b)) for a, b in edges], "id_a bigint, id_b bigint")
+
+    got = {int(r.id): int(r.cluster_id)
+           for r in D.dup_clusters(pairs, max_iter=15).collect()}
+    assert got == _union_find(edges)
+    got_wide = {int(r.id): int(r.cluster_id)
+                for r in D.dup_clusters(pairs, max_iter=60).collect()}
+    assert got_wide == got
 
 
 def test_dup_clusters_job_budget(spark, jobs_during):
